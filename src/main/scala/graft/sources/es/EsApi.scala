@@ -1,15 +1,22 @@
 package graft.sources.es
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
+
+import graft.sources.jsonl.MapSource
 
 /** The search/scroll wire protocol (reference dump-es-parquet:219-266):
   * request bodies built with Jackson (correct escaping by construction)
-  * and response parsing tolerant of the ES6/ES7 split — `hits.total` is a
-  * bare int on ES6 and `{"value": N, "relation": …}` on ES7+/OpenSearch
-  * (reference :233-235).
+  * and one streaming walk over search responses, tolerant of the ES6/ES7
+  * split — `hits.total` is a bare int on ES6 and `{"value": N,
+  * "relation": …}` on ES7+/OpenSearch (reference :233-235).
   */
 object EsApi {
 
@@ -19,36 +26,94 @@ object EsApi {
     * possibly-refreshed PIT id, the total hit count (from the first page;
     * -1 when the server omits it), its relation (`eq` = exact; `gte` =
     * ES7's default 10k-capped lower bound; None on ES6, which always
-    * counts exactly), the raw `_source` documents, and the last hit's
-    * `sort` values — the `search_after` cursor for the next PIT page. */
-  final case class Page(scrollId: Option[String], total: Long, hits: Seq[JsonNode],
-                        pitId: Option[String] = None,
-                        lastSort: Option[JsonNode] = None,
-                        totalRelation: Option[String] = None)
+    * counts exactly), one decoded document per hit (`JsonNode` trees from
+    * [[parsePage]], rows from [[readPage]]), and the last hit's `sort`
+    * values — the `search_after` cursor for the next PIT page. */
+  final case class Page[+H](scrollId: Option[String], total: Long, hits: Seq[H],
+                            pitId: Option[String] = None,
+                            lastSort: Option[JsonNode] = None,
+                            totalRelation: Option[String] = None)
 
-  def parsePage(json: String): Page = {
-    val root = mapper.readTree(json)
+  /** A search response as `_source` trees. */
+  def parsePage(json: String): Page[JsonNode] =
+    walkPage(MapSource.json.createParser(json), json.take(200))(
+      p => mapper.readTree[JsonNode](p), () => mapper.createObjectNode())
+
+  /** A search response's bytes decoded straight into rows of `schema`,
+    * one per hit, in one pass with no tree. */
+  def readPage(body: Array[Byte], schema: StructType): Page[InternalRow] =
+    walkPage(MapSource.json.createParser(body),
+      new String(body, 0, math.min(body.length, 800), UTF_8).take(200))(
+      p => MapSource.read(p, schema), () => MapSource.nulls(schema))
+
+  /** The one walk over a search response. Reads `_scroll_id`, `pit_id`,
+    * `hits.total` in both shapes (ES6 bare int, ES7+ `{value, relation}`)
+    * and each hit's `sort`, in any key order; hands each hit's `_source`
+    * value to `source`, which must consume it (`_source: false` hits have
+    * none and count as `absent` documents). The whole response is read
+    * before this returns, so a body cut anywhere — mid-hit included —
+    * throws the parser's end-of-input error instead of passing for the
+    * end of `hits`. Duplicate keys: the last one wins, as in a tree. */
+  private def walkPage[H](p: JsonParser, head: => String)(
+      source: JsonParser => H, absent: () => H): Page[H] = {
+    var scrollId, pitId, relation: Option[String] = None
+    var total = -1L
+    var sawHits = false
+    val hits = Vector.newBuilder[H]
+    var lastSort: Option[JsonNode] = None
+    def text(): Option[String] = Some(mapper.readTree[JsonNode](p).asText())
+    def fields(onField: String => Unit): Unit = {
+      var name = p.nextFieldName()
+      while (name != null) { p.nextToken(); onField(name); name = p.nextFieldName() }
+      MapSource.endOf(p, JsonToken.END_OBJECT)
+    }
+    def hit(): Unit = {
+      var doc: Option[H] = None
+      var sort: Option[JsonNode] = None
+      if (p.currentToken() == JsonToken.START_OBJECT) fields {
+        case "_source" => doc = Some(source(p))
+        case "sort"    => sort = Some(mapper.readTree[JsonNode](p))
+        case _         => p.skipChildren()
+      } else p.skipChildren()
+      hits += doc.getOrElse(absent())
+      lastSort = sort
+    }
+    def hitsObject(): Unit = {
+      sawHits = true
+      total = -1L; relation = None; hits.clear(); lastSort = None
+      if (p.currentToken() == JsonToken.START_OBJECT) fields {
+        case "total" =>
+          val t = mapper.readTree[JsonNode](p)
+          if (t.isObject) { // ES7+/OS dict
+            total = Option(t.get("value")).fold(-1L)(_.asLong())
+            relation = Option(t.get("relation")).map(_.asText())
+          } else { total = t.asLong(); relation = None } // ES6 bare int
+        case "hits" =>
+          hits.clear(); lastSort = None
+          if (p.currentToken() == JsonToken.START_ARRAY) {
+            var t = p.nextToken()
+            while (t != JsonToken.END_ARRAY) {
+              if (t == null) MapSource.endOf(p, JsonToken.END_ARRAY)
+              hit()
+              t = p.nextToken()
+            }
+          } else p.skipChildren()
+        case _ => p.skipChildren()
+      } else p.skipChildren()
+    }
+    try {
+      if (p.nextToken() == JsonToken.START_OBJECT) fields {
+        case "_scroll_id" => scrollId = text()
+        case "pit_id"     => pitId = text()
+        case "hits"       => hitsObject()
+        case _            => p.skipChildren()
+      }
+    } finally p.close()
     // a 200 that isn't a search response (proxy page, error body) should
     // name the problem, not NPE
-    val hitsNode = Option(root.get("hits")).getOrElse(
-      throw new IllegalArgumentException(
-        s"unexpected response (no 'hits'): ${json.take(200)}"))
-    val (total, relation) = Option(hitsNode.get("total")) match {
-      case Some(t) if t.isObject => // ES7+/OS dict
-        (t.get("value").asLong(), Option(t.get("relation")).map(_.asText()))
-      case Some(t)               => (t.asLong(), None)      // ES6 bare int
-      case None                  => (-1L, None)
-    }
-    // `_source: false` responses carry hit envelopes without _source —
-    // each hit still counts as one (empty) document
-    val envelopes = Option(hitsNode.get("hits")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty)
-    val docs = envelopes.map(h => Option(h.get("_source"): JsonNode)
-      .getOrElse(mapper.createObjectNode()))
-    Page(Option(root.get("_scroll_id")).map(_.asText()), total, docs,
-      pitId = Option(root.get("pit_id")).map(_.asText()),
-      lastSort = envelopes.lastOption.flatMap(h => Option(h.get("sort"))),
-      totalRelation = relation)
+    if (!sawHits)
+      throw new IllegalArgumentException(s"unexpected response (no 'hits'): $head")
+    Page(scrollId, total, hits.result(), pitId, lastSort, relation)
   }
 
   /** One wire sort clause; `missing` is ES's null placement

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.{EsMapping, Retry}
-import graft.sources.jsonl.{MapSource, RowFilter}
+import graft.sources.jsonl.RowFilter
 
 /** DSv2 source over a live Elasticsearch/OpenSearch cluster — the
   * reference's entire source side (dump-es-parquet:219-266) re-expressed
@@ -398,19 +398,21 @@ private[es] class EsScrollPartitionReader(
   private val sliceTag = part.slice.map { case (i, m) => s" slice $i/$m" }.getOrElse("")
 
   private var scrollId: Option[String] = None
-  private var page: Iterator[com.fasterxml.jackson.databind.JsonNode] = Iterator.empty
+  private var page: Iterator[InternalRow] = Iterator.empty
   private var exhausted = false
   private var total = -1L
   private var readHits = 0L
   private var pagesFetched = 0
   private var current: InternalRow = _
 
-  private def fetch(op: => String): EsApi.Page =
-    EsApi.parsePage(Retry.withBackoff(conf.retries, conf.retryBackoffMs,
+  // the decode stays outside the retry: re-posting a scroll id is not
+  // idempotent, so a body that fails to decode fails the slice
+  private def fetch(op: => Array[Byte]): EsApi.Page[InternalRow] =
+    EsApi.readPage(Retry.withBackoff(conf.retries, conf.retryBackoffMs,
       EsHttpError.transient,
       onRetry = (left, e) => EsScrollSource.log.warn(
         s"${conf.index}$sliceTag: transient source error " +
-          s"($left attempts left): ${e.getMessage}"))(op))
+          s"($left attempts left): ${e.getMessage}"))(op), required)
 
   private def nextPage(): Unit = {
     // pushed limit = one-shot probe search: a single page is the whole
@@ -428,9 +430,9 @@ private[es] class EsScrollPartitionReader(
           if (part.limit.isDefined) "" else s"?scroll=${conf.scroll}"
         val body = EsApi.searchBody(conf.size, conf.sort, part.wireQuery,
           part.sourceFields, part.slice, part.range)
-        fetch(transport.post(s"/${conf.index}/_search$scrollParam", body))
+        fetch(transport.postBytes(s"/${conf.index}/_search$scrollParam", body))
       case Some(id) =>
-        fetch(transport.post("/_search/scroll",
+        fetch(transport.postBytes("/_search/scroll",
           EsApi.scrollBody(conf.scroll, id)))
     }
     if (pagesFetched == 0) {
@@ -452,7 +454,7 @@ private[es] class EsScrollPartitionReader(
   @annotation.tailrec
   final override def next(): Boolean =
     if (page.hasNext) {
-      val row = MapSource.coerce(page.next(), required)
+      val row = page.next()
       if (rowFilter(row)) { current = row; true } else next()
     } else if (exhausted) false
     else { nextPage(); next() }
@@ -503,7 +505,7 @@ private[es] class EsPitPartitionReader(
 
   private var pitId: Option[String] = None
   private var cursor: Option[com.fasterxml.jackson.databind.JsonNode] = None
-  private var page: Iterator[com.fasterxml.jackson.databind.JsonNode] = Iterator.empty
+  private var page: Iterator[InternalRow] = Iterator.empty
   private var exhausted = false
   private var total = -1L
   private var totalExact = true
@@ -532,10 +534,10 @@ private[es] class EsPitPartitionReader(
     // would silently understate every index past 10k documents; asking on
     // every follow-up page would re-pay the exact-count traversal for a
     // number already known.
-    val p = EsApi.parsePage(retried(transport.post("/_search",
+    val p = EsApi.readPage(retried(transport.postBytes("/_search",
       EsApi.searchBody(conf.size, sort, part.wireQuery, part.sourceFields,
         part.slice, pit = Some((id, conf.scroll)), searchAfter = cursor,
-        trackTotal = pagesFetched == 0))))
+        trackTotal = pagesFetched == 0))), required)
     if (pagesFetched == 0) {
       total = p.total
       // defensive: a server that ignores track_total_hits still reports
@@ -563,7 +565,7 @@ private[es] class EsPitPartitionReader(
   @annotation.tailrec
   final override def next(): Boolean =
     if (page.hasNext) {
-      val row = MapSource.coerce(page.next(), required)
+      val row = page.next()
       if (rowFilter(row)) { current = row; true } else next()
     } else if (exhausted) false
     else { nextPage(); next() }

@@ -2,6 +2,7 @@ package graft.sources.es
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Duration
 
 /** The HTTP round-trip seam of the live Elasticsearch/OpenSearch source.
@@ -15,7 +16,10 @@ import java.time.Duration
   */
 trait EsTransport extends AutoCloseable {
   def get(path: String): String
-  def post(path: String, body: String): String
+  /** The response body's bytes, which the page readers decode in one
+    * pass without a `String` in between. */
+  def postBytes(path: String, body: String): Array[Byte]
+  def post(path: String, body: String): String = new String(postBytes(path, body), UTF_8)
   /** DELETE with a JSON body (clear-scroll's shape). */
   def delete(path: String, body: String): Unit
   override def close(): Unit = ()
@@ -77,16 +81,18 @@ final class HttpTransport(conf: EsHttpConfig) extends EsTransport {
       .timeout(Duration.ofSeconds(conf.timeoutSec.toLong))
       .header("Content-Type", "application/json")
 
-  private def send(req: HttpRequest): String = {
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+  /** Every request's one send path: the body as bytes (JSON is UTF-8). */
+  private def send(req: HttpRequest): Array[Byte] = {
+    val resp = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
     if (resp.statusCode() >= 400)
-      throw new EsHttpError(resp.statusCode(), req.uri().getPath, resp.body())
+      throw new EsHttpError(resp.statusCode(), req.uri().getPath, new String(resp.body(), UTF_8))
     resp.body()
   }
 
-  override def get(path: String): String = send(request(path).GET().build())
+  override def get(path: String): String =
+    new String(send(request(path).GET().build()), UTF_8)
 
-  override def post(path: String, body: String): String =
+  override def postBytes(path: String, body: String): Array[Byte] =
     send(request(path).POST(HttpRequest.BodyPublishers.ofString(body)).build())
 
   override def delete(path: String, body: String): Unit =

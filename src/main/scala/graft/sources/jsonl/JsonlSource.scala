@@ -1,5 +1,6 @@
 package graft.sources.jsonl
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 import scala.jdk.CollectionConverters._
 
@@ -56,7 +57,7 @@ class JsonlSource extends TableProvider with DataSourceRegister {
       val path = new Path(p)
       val fs = path.getFileSystem(hconf)
       JsonlSource.listFiles(fs, path).iterator.flatMap { f =>
-        val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(f)))
+        val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(f), UTF_8))
         try Iterator.continually(in.readLine()).takeWhile(_ != null)
           .take(100) // bounded probe per file
           .filterNot(_.isBlank)
@@ -275,7 +276,7 @@ private[jsonl] class JsonlCountReader(file: String, hconf: Configuration)
     val in = graft.sources.Retry.withBackoff(attempts = 3, backoffMs = 100) {
       val path = new Path(file)
       val fs = path.getFileSystem(hconf)
-      new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(path)))
+      new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(path), UTF_8))
     }
     var n = 0L
     var corrupt = 0L
@@ -307,13 +308,12 @@ private[jsonl] class JsonlPartitionReader(required: StructType, file: String,
                                           limit: Option[Int] = None)
     extends PartitionReader[InternalRow] {
 
-  private val mapper = new ObjectMapper()
   // S4: the open is the reader's network-ish call; a live scroll source
   // would wrap every page fetch the same way
   private val in = graft.sources.Retry.withBackoff(attempts = 3, backoffMs = 100) {
     val path = new Path(file)
     val fs = path.getFileSystem(hconf)
-    new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(path)))
+    new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(path), UTF_8))
   }
   private var current: InternalRow = _
   private val rowFilter = RowFilter(required, pushed)
@@ -328,23 +328,22 @@ private[jsonl] class JsonlPartitionReader(required: StructType, file: String,
       if (corruptLines > 0)
         JsonlSource.log.warn(s"$file: skipped $corruptLines corrupt JSON line(s)")
       false
-    } else if (line.isBlank) next() // whitespace-only parses to MissingNode
+    } else if (line.isBlank) next() // whitespace only: no document
     else {
       // log-and-skip on corrupt lines — the document-level form of the
       // reference's "survive problematic data" stance (field-level
-      // failures already null inside MapSource.coerce)
-      val doc = try {
-        val d = mapper.readTree(line)
-        if (d.isMissingNode) { corruptLines += 1; null } else d
+      // failures already null inside MapSource). The kernel reads the
+      // line's tokens straight into the row.
+      val row = try {
+        val p = MapSource.json.createParser(line)
+        try if (p.nextToken() == null) null else MapSource.read(p, required)
+        finally p.close()
       } catch {
-        case _: com.fasterxml.jackson.core.JacksonException => corruptLines += 1; null
+        case _: com.fasterxml.jackson.core.JacksonException => null
       }
-      if (doc == null) next()
-      else {
-        val row = MapSource.coerce(doc, required)
-        if (rowFilter(row)) { current = row; emitted += 1; true }
-        else next()
-      }
+      if (row == null) { corruptLines += 1; next() }
+      else if (rowFilter(row)) { current = row; emitted += 1; true }
+      else next()
     }
   }
 

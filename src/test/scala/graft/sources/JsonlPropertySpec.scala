@@ -13,10 +13,10 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Property coverage for the reader path: arbitrary JSON documents
-  * through MapSource.coerce (totality + well-typedness + agreement with
-  * the Column-side Lenient stage) and through RowFilter (pushdown must
-  * never change results vs filtering above the scan). Seeded batches, so
-  * failures reproduce. */
+  * through MapSource.coerce and the byte path the readers take
+  * (totality + well-typedness + agreement with the Column-side Lenient
+  * stage) and through RowFilter (pushdown must never change results vs
+  * filtering above the scan). Seeded batches, so failures reproduce. */
 class JsonlPropertySpec extends SparkSpec {
 
   import spark.implicits._
@@ -35,6 +35,7 @@ class JsonlPropertySpec extends SparkSpec {
       "2024-03-01", "2024-03-01T12:30:00", "2024-03-01 12:30:00+02:00",
       " yes ", "No", "t", "0", "1", "null", "", "   ", "é世\"\\\nx", "NaN", "Inf"),
     Gen.choose(-30000000000L, 40000000000L), // straddles the epoch boundary
+    Gen.oneOf(BigInt("1" + "0" * 20), BigInt("-" + "9" * 25)), // beyond the Long range
     Gen.const(null))
 
   private val valueGen: Gen[Any] = Gen.frequency(
@@ -56,6 +57,7 @@ class JsonlPropertySpec extends SparkSpec {
     case null => mapper.nullNode()
     case l: Long => mapper.getNodeFactory.numberNode(l)
     case d: Double => mapper.getNodeFactory.numberNode(d)
+    case b: BigInt => mapper.getNodeFactory.numberNode(b.bigInteger)
     case b: Boolean => mapper.getNodeFactory.booleanNode(b)
     case s: String => mapper.getNodeFactory.textNode(s)
     case l: List[_] =>
@@ -107,6 +109,7 @@ class JsonlPropertySpec extends SparkSpec {
   })
 
   test("property: coerce is total and well-typed over arbitrary documents") {
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
     docs(600, seed = 1L).foreach { doc =>
       val node = toNode(doc)
       val row = MapSource.coerce(node, schema) // must never throw
@@ -115,6 +118,11 @@ class JsonlPropertySpec extends SparkSpec {
         assert(wellTyped(v, f.dataType),
           s"field ${f.name} ill-typed for doc ${mapper.writeValueAsString(node)}: $v")
       }
+      // the reader's byte path: the document's JSON bytes, no tree
+      val p = MapSource.json.createParser(mapper.writeValueAsBytes(node))
+      p.nextToken()
+      assert(toRow(MapSource.read(p, schema)) == toRow(row),
+        s"byte path differs for doc ${mapper.writeValueAsString(node)}")
     }
   }
 

@@ -167,6 +167,20 @@ class JsonlSourceSpec extends SparkSpec {
     assert(inferred.count() == 2)
   }
 
+  test("JSONL reads as UTF-8 whatever the JVM's default charset") {
+    val dir = Files.createTempDirectory("jsonl_utf8")
+    Files.write(dir.resolve("a.jsonl"),
+      "{\"name\": \"naïve 東京\", \"été\": 1}\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val typed = spark.read.format("graft-jsonl")
+      .schema(StructType(Seq(StructField("name", StringType))))
+      .load(dir.toString).as[String].collect()
+    assert(typed.toSeq == Seq("naïve 東京"))
+    // schema inference opens the file too
+    val inferred = spark.read.format("graft-jsonl").load(dir.toString)
+    assert(inferred.columns.toSeq == Seq("name", "été"))
+    assert(inferred.select($"name").as[String].collect().toSeq == Seq("naïve 東京"))
+  }
+
   test("map_source semantics: first-of-list, int(float), epoch heuristic, log-and-null") {
     def c(json: String, dt: DataType): Any =
       MapSource.coerceValue(mapper.readTree(json), dt)

@@ -217,6 +217,47 @@ class EsScrollSourceSpec extends SparkSpec {
     } finally server.close()
   }
 
+  /** A cut body fails on the parser's end-of-input error, not elsewhere. */
+  private def cutBody(t: Throwable): Boolean =
+    t != null && (t.isInstanceOf[com.fasterxml.jackson.core.io.JsonEOFException] ||
+      cutBody(t.getCause))
+
+  test("truncated page: the table fails whole, no file shows, the others are written") {
+    val server = new StubEsServer(
+      Map("logs-2024.01" -> (0 until 23).map(doc), "logs-2024.02" -> (0 until 9).map(doc)),
+      Map("logs-2024.01" -> props, "logs-2024.02" -> props))
+    try {
+      val out = java.nio.file.Files.createTempDirectory("es_cut")
+      val cat = EsCatalog(EsHttpConfig(baseUrl = server.url),
+        readOptions = Map("size" -> "7", "retries" -> "2", "retry_backoff_ms" -> "1"))
+      // the first search of the run is the first page of logs-2024.01
+      server.truncateNext(1)
+      val results = graft.DumpJob.run(spark, cat, out.toString,
+        graft.DumpJob.Config(pattern = "logs-*"))
+      assert(results.map(r => r.table -> r.getClass.getSimpleName) ==
+        Seq("logs-2024.01" -> "Failed", "logs-2024.02" -> "Written"), results)
+      results.collect { case f: graft.DumpJob.Failed => assert(cutBody(f.error), f.error) }
+      val visible = java.nio.file.Files.walk(out).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(_.getFileName.toString).toSeq
+      assert(!visible.exists(_.startsWith("logs-2024.01")), visible)
+      assert(visible.exists(_.startsWith("logs-2024.02")), visible)
+    } finally server.close()
+  }
+
+  test("truncated page: a read throws rather than returning a short count") {
+    withServer() { server =>
+      server.truncateNext(1) // the count(*) probe
+      assert(cutBody(intercept[Exception](read(server).count())))
+      server.truncateNext(1) // the first scroll page (a filter keeps the scan path)
+      assert(cutBody(intercept[Exception](read(server).filter($"id" >= 0).count())))
+      server.truncateNext(1) // a PIT page
+      assert(cutBody(intercept[Exception](
+        read(server, "mode" -> "pit").filter($"id" >= 0).count())))
+      assert(read(server).filter($"id" >= 0).count() == 23) // budget spent: whole again
+    }
+  }
+
   private def pushedScan(df: org.apache.spark.sql.DataFrame): EsScan =
     df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>

@@ -19,6 +19,8 @@ import scala.jdk.CollectionConverters._
   *  - `es6Totals`: `hits.total` as a bare int (ES6) vs `{value,relation}`
   *  - `legacyDocType`: ES6 `{mappings: {doc: {properties}}}` vs ES7+
   *  - `failNext(n)`: next n requests answer 503 (cluster flap)
+  *  - `truncateNext(n)`: next n search responses answer 200 with the
+  *    body cut mid-hit (mid-`hits` when the page has no hit)
   *  - sliced scrolls partition documents by `index % max == id`
   *  - `_source` include lists are honored (projection reaches the wire)
   *  - `addDocs` appends documents live (the tail-source suite's ingest)
@@ -64,6 +66,17 @@ final class StubEsServer(
 
   def failNext(n: Int): Unit = failBudget.set(n)
 
+  private val truncateBudget = new AtomicInteger(0)
+  def truncateNext(n: Int): Unit = truncateBudget.set(n)
+
+  /** A search response cut halfway into its last hit's `_source`, or
+    * halfway through the body when no hit carries one. */
+  private def truncated(body: String): String = {
+    val at = body.lastIndexOf("\"_source\"")
+    val from = if (at >= 0) at else 0
+    body.substring(0, from + (body.length - from) / 2)
+  }
+
   // targeted mid-dump flap: 503 exactly the nth (1-based) index-less
   // /_search request — i.e. the nth PIT page fetch
   private val pitSearchCounter = new AtomicInteger(0)
@@ -73,13 +86,14 @@ final class StubEsServer(
     requests.asScala.toSeq.filter(r => r._1 == "POST" && r._2.contains("/_search") &&
       !r._2.contains("/_search/scroll"))
 
+  private val pool = Executors.newFixedThreadPool(8)
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/", handler)
-  server.setExecutor(Executors.newFixedThreadPool(8))
+  server.setExecutor(pool)
   server.start()
 
   def url: String = s"http://127.0.0.1:${server.getAddress.getPort}"
-  override def close(): Unit = server.stop(0)
+  override def close(): Unit = try server.stop(0) finally pool.shutdownNow()
 
   private def handler: HttpHandler = (ex: HttpExchange) => {
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
@@ -356,7 +370,12 @@ final class StubEsServer(
   }
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
-    val bytes = body.getBytes(UTF_8)
+    val search = status == 200 && ex.getRequestMethod == "POST" &&
+      ex.getRequestURI.getPath.contains("_search")
+    val sent =
+      if (search && truncateBudget.getAndUpdate(n => math.max(0, n - 1)) > 0) truncated(body)
+      else body
+    val bytes = sent.getBytes(UTF_8)
     ex.getResponseHeaders.add("Content-Type", "application/json")
     ex.sendResponseHeaders(status, bytes.length.toLong)
     val os = ex.getResponseBody
