@@ -98,7 +98,6 @@ object Dump {
       sort = flags.get("sort").filterNot(_ => esMode)
         .map(_.split(",").toSeq).getOrElse(Nil),
       flatten = flags.contains("flatten"),
-      rawJson = output == "jsonl" || output == "stdout",
       sink = Sink.Config(
         format = output match {
           case "ndjson"            => "json"

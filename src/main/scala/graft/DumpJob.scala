@@ -23,8 +23,7 @@ object DumpJob {
       sort: Seq[String] = Nil,           // P3, reference --sort field:dir
       schema: Option[StructType] = None, // None = schema-on-read passthrough
       flatten: Boolean = false,          // reference --flatten
-      rawJson: Boolean = false,          // K3 passthrough mode
-      sink: Sink.Config = Sink.Config())
+      sink: Sink.Config = Sink.Config()) // format "text": K3 raw JSON lines
 
   /** P2 — expand field globs against actual columns, preserving table
     * column order (the reference's `_source` wildcard filter,
@@ -148,7 +147,8 @@ object DumpJob {
           case None => config.sink
         }
         val files =
-          if (config.rawJson) Sink.writeRawJson(df, s"$outDir/$table", table, sinkCfg)
+          if (config.sink.format == "text")
+            Sink.writeRawJson(df, s"$outDir/$table", table, sinkCfg)
           else Sink.write(df, s"$outDir/$table", table, sinkCfg)
         // the write was the observed action, so get() returns immediately
         val warnings = obs.map(_.get.collect {

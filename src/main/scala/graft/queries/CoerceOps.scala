@@ -189,7 +189,7 @@ object CoerceOps {
     import graft.sinks.Sink
     val out = java.nio.file.Files.createTempDirectory("graft_q48").toString
     DumpJob.run(s, dir, out, DumpJob.Config(
-      pattern = "supplier", rawJson = true, sink = Sink.Config(format = "text")))
+      pattern = "supplier", sink = Sink.Config(format = "text")))
     val (schema, _) = EsMapping.toStructType(
       """{"properties": {
         |  "s_suppkey":   {"type": "long"},

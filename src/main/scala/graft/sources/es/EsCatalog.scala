@@ -2,7 +2,7 @@ package graft.sources.es
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
-import graft.sources.{Retry, SourceCatalog}
+import graft.sources.SourceCatalog
 
 /** Live-cluster implementation of the [[graft.sources.SourceCatalog]]
   * seam: index-pattern resolution via `indices.get_settings` (S1,
@@ -33,11 +33,7 @@ final case class EsCatalog(
     val c = conf(pattern)
     val transport = c.transportFactory.open()
     try {
-      val resp = Retry.withBackoff(c.retries, c.retryBackoffMs,
-        EsHttpError.transient) {
-        transport.get(s"/$pattern/_settings")
-      }
-      EsApi.parseIndexNames(resp)
+      EsApi.parseIndexNames(c.retried(pattern)(transport.get(s"/$pattern/_settings")))
     } finally transport.close()
   }
 

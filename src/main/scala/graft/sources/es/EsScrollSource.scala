@@ -18,10 +18,18 @@ import graft.sources.jsonl.RowFilter
   * reference's entire source side (dump-es-parquet:219-266) re-expressed
   * in Spark's execution model:
   *
-  *  - one `InputPartition` per scroll slice (`slices` option): each
-  *    executor drives an independent `search?scroll` + `scroll` loop with
-  *    `"slice": {id, max}`, so read parallelism is horizontal across the
-  *    cluster instead of the reference's single sequential scroll;
+  *  - one `InputPartition` per slice (`slices` option): each executor
+  *    drives an independent walk with `"slice": {id, max}`, so read
+  *    parallelism is horizontal across the cluster instead of the
+  *    reference's single sequential scroll;
+  *  - one partition reader (`EsPartitionReader`) drives every walk
+  *    (`EsWalk`), chosen at planning time: `mode=scroll` (the default,
+  *    the reference's `search?scroll` + `scroll` loop), `mode=pit`
+  *    (point-in-time + `search_after`), and the one-search probe a pushed
+  *    limit or TopN becomes in either mode; a completely pushed
+  *    `count(*)` is one size-0 request (`EsCountReader`). Batch scans and
+  *    the tail stream's microbatches share one planner, so every walk
+  *    honours the tail window;
   *  - schema comes from the index mapping (`EsMapping`, S2) unless the
   *    caller supplies one; document→row coercion (`MapSource`, T1/T2)
   *    runs inside the partition reader against the pruned schema;
@@ -29,9 +37,10 @@ import graft.sources.jsonl.RowFilter
   *    `_source` include list, so unprojected fields never leave the
   *    cluster (P2); translatable filters become a query_string clause
   *    (P1, EsQuery) and every filter stays residual for Spark to re-check;
-  *  - every page fetch is wrapped in Retry.withBackoff (S4) with the
-  *    reference's transient-transport-error semantics (:227-230), and the
-  *    scroll context is cleared on close.
+  *  - every request is retried through `EsScanConfig.retried` (S4) with
+  *    the reference's transient-transport-error semantics (:227-230),
+  *    the page decode staying outside the retry, and the scroll or PIT
+  *    context is closed with the reader.
   *
   * Usage:
   * {{{
@@ -74,10 +83,7 @@ object EsScrollSource {
   private[es] def fetchSchema(conf: EsScanConfig): StructType = {
     val transport = conf.transportFactory.open()
     try {
-      val resp = Retry.withBackoff(conf.retries, conf.retryBackoffMs,
-        EsHttpError.transient) {
-        transport.get(s"/${conf.index}/_mapping")
-      }
+      val resp = conf.retried(conf.index)(transport.get(s"/${conf.index}/_mapping"))
       val key = EsApi.mappingKey(resp, conf.index)
       val (schema, warnings) = EsMapping.fromMappingResponse(resp, key)
       warnings.foreach(w => log.warn(s"${conf.index}: $w"))
@@ -100,8 +106,16 @@ private[es] final case class EsScanConfig(
     tailField: Option[String] = None,
     startFrom: Long = 0L,
     maxResultWindow: Int = 10000,
-    mode: String = "scroll") {
+    mode: EsWalk = EsWalk.Scroll) {
   def transportFactory: EsTransportFactory = HttpTransportFactory(http)
+
+  /** Every ES call's retry (S4): `retries` attempts `retryBackoffMs`
+    * apart on the reference's transient transport errors (:227-230), each
+    * retry logged against `what`. */
+  def retried[T](what: String)(op: => T): T =
+    Retry.withBackoff(retries, retryBackoffMs, EsHttpError.transient,
+      onRetry = (left, e) => EsScrollSource.log.warn(
+        s"$what: transient source error ($left attempts left): ${e.getMessage}"))(op)
 }
 
 private[es] object EsScanConfig {
@@ -109,6 +123,14 @@ private[es] object EsScanConfig {
     * `slices`/`retries`/`retry_backoff_ms` are the Spark-side additions. */
   def fromOptions(opts: Map[String, String]): EsScanConfig = {
     val o = opts.map { case (k, v) => k.toLowerCase -> v }
+    // 0 slices plans no partition and 0 size pages nothing: either would
+    // write an empty table and report it written
+    def atLeastOne(name: String, default: Int): Int = {
+      val v = o.get(name).map(_.toInt).getOrElse(default)
+      if (v < 1) throw new IllegalArgumentException(
+        s"graft-es option '$name' must be at least 1, got $v")
+      v
+    }
     EsScanConfig(
       http = EsHttpConfig(
         baseUrl = o.getOrElse("es", "http://localhost:9200"),
@@ -120,13 +142,13 @@ private[es] object EsScanConfig {
       index = o.getOrElse("index",
         throw new IllegalArgumentException("graft-es requires option 'index'")),
       query = o.get("query").filter(_.nonEmpty),
-      size = o.get("size").map(_.toInt).getOrElse(500),
+      size = atLeastOne("size", 500),
       scroll = o.getOrElse("scroll", "1h"),
-      slices = o.get("slices").map(_.toInt).getOrElse(1),
+      slices = atLeastOne("slices", 1),
       // default sort: _doc — the efficient scroll order; pass
       // sort=@timestamp:asc for the reference CLI's default (:379-380)
       sort = EsApi.parseSort(o.getOrElse("sort", "_doc:asc")),
-      retries = o.get("retries").map(_.toInt).getOrElse(5),
+      retries = atLeastOne("retries", 5),
       retryBackoffMs = o.get("retry_backoff_ms").map(_.toLong)
         .getOrElse(Retry.ReferenceBackoffMs),
       tailField = o.get("tail_field").filter(_.nonEmpty),
@@ -139,7 +161,8 @@ private[es] object EsScanConfig {
       // lives client-side, so a mid-dump retry re-probes from the last
       // sort key instead of restarting the walk
       mode = o.getOrElse("mode", "scroll") match {
-        case m @ ("scroll" | "pit") => m
+        case "scroll" => EsWalk.Scroll
+        case "pit"    => EsWalk.Pit
         case other => throw new IllegalArgumentException(
           s"graft-es mode must be 'scroll' or 'pit', got '$other'")
       })
@@ -298,31 +321,18 @@ private[es] class EsScan(required: StructType, conf: EsScanConfig,
     s"graft-es ${parts.mkString(" ")}"
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val wireQuery = EsQuery.combine(conf.query, pushed.toIndexedSeq)
-    // empty (count(*)-style) projection → Some(Nil) → `_source: false`:
-    // hit envelopes page through, document bodies never leave the cluster
-    val fields = Some(required.fieldNames.toSeq)
+  override def planInputPartitions(): Array[InputPartition] =
     if (countStar)
-      // completely-pushed count(*): one size-0 request, one row back
-      Array(EsPartition(conf, wireQuery, None, slice = None, countOnly = true))
+      Array(EsCountPartition(conf, EsQuery.combine(conf.query, pushed.toIndexedSeq)))
     else pushedLimit match {
       case Some(l) =>
-        // probe shape: ONE plain search, sort+size on the wire, no scroll
-        // context, no slices — q02-shaped queries cost one round-trip
+        // probe shape: ONE plain search, sort+size on the wire, in either
+        // mode — q02-shaped queries cost one round-trip
         val sort = if (pushedSort.nonEmpty) pushedSort else conf.sort
-        Array(EsPartition(conf.copy(size = l, sort = sort), wireQuery,
-          fields, slice = None, limit = Some(l)))
+        EsPartition.plan(required, conf.copy(size = l, sort = sort), pushed, EsWalk.Probe)
       case None =>
-        // sliced scroll: each partition is an independent server-side
-        // slice. slices=1 sends no slice clause (the reference's shape).
-        (0 until conf.slices).map { i =>
-          val slice = if (conf.slices > 1) Some((i, conf.slices)) else None
-          EsPartition(conf, wireQuery, fields, slice,
-            stopAfter = scrollStop): InputPartition
-        }.toArray
+        EsPartition.plan(required, conf, pushed, conf.mode, stopAfter = scrollStop)
     }
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new EsReaderFactory(required, pushed)
@@ -332,31 +342,77 @@ private[es] class EsScan(required: StructType, conf: EsScanConfig,
     new EsTailStream(required, conf, pushed)
 }
 
+/** Which requests a partition sends and which server context it closes,
+  * chosen once at planning time. */
+private[es] sealed abstract class EsWalk(override val toString: String) extends Serializable
+
+private[es] object EsWalk {
+  /** One plain search of `size` hits (a pushed limit or TopN): a single
+    * page is the whole result, and no context is opened or followed. */
+  case object Probe extends EsWalk("probe")
+
+  /** `_search?scroll` opens a server-side context, `_search/scroll`
+    * follows it (reference :219-266); the scroll is cleared on close. */
+  case object Scroll extends EsWalk("scroll")
+
+  /** Point-in-time + `search_after`, the ES 7.10+ replacement for scroll.
+    * The continuation cursor (the last hit's `sort` values) lives on the
+    * CLIENT: a scroll retry replays a server-side context that may have
+    * expired or lost its node, while a PIT retry re-sends the same
+    * `search_after` request, so a mid-dump cluster flap resumes from the
+    * last sort key without re-reading (or double-reading) a document.
+    * `search_after` needs a total order, so the walk sorts by the
+    * configured keys (minus bare `_doc`, which is scroll-specific) plus
+    * the `_shard_doc` tiebreaker. Each slice opens its own PIT and
+    * deletes it on close. */
+  case object Pit extends EsWalk("pit")
+}
+
 private[es] final case class EsPartition(
     conf: EsScanConfig,
+    walk: EsWalk,
     wireQuery: Option[String],
     sourceFields: Option[Seq[String]],
     slice: Option[(Int, Int)],
-    range: Option[(String, Double, Double)] = None,
-    limit: Option[Int] = None,
-    countOnly: Boolean = false,
-    stopAfter: Option[Int] = None) extends InputPartition
+    range: Option[(String, Double, Double)],
+    stopAfter: Option[Int]) extends InputPartition
 
-private[es] class EsReaderFactory(required: StructType, pushed: Array[Filter])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[EsPartition]
-    if (p.countOnly) new EsCountReader(p)
-    // pushed-limit probes are a single plain search — no walk context
-    // needed, so they take the scroll reader's one-shot path in any mode
-    else if (p.conf.mode == "pit" && p.limit.isEmpty)
-      new EsPitPartitionReader(required, pushed, p)
-    else new EsScrollPartitionReader(required, pushed, p)
+private[es] object EsPartition {
+  /** The one planner for batch scans and tail microbatches. Pushed
+    * filters join the `query` option on the wire; the pruned columns
+    * become the `_source` list (an empty projection → `_source: false`:
+    * hit envelopes page through, document bodies never leave the
+    * cluster). A probe is one partition; a scroll or PIT walk is one
+    * partition per slice, each an independent server-side slice, and
+    * `slices=1` sends no slice clause (the reference's shape). */
+  def plan(required: StructType, conf: EsScanConfig, pushed: Array[Filter],
+           walk: EsWalk, range: Option[(String, Double, Double)] = None,
+           stopAfter: Option[Int] = None): Array[InputPartition] = {
+    val wireQuery = EsQuery.combine(conf.query, pushed.toIndexedSeq)
+    val fields = Some(required.fieldNames.toSeq)
+    val n = if (walk == EsWalk.Probe) 1 else conf.slices
+    (0 until n).map { i =>
+      val slice = if (n > 1) Some((i, n)) else None
+      EsPartition(conf, walk, wireQuery, fields, slice, range, stopAfter): InputPartition
+    }.toArray
   }
 }
 
+/** A completely-pushed count(*): one size-0 request, one row back. */
+private[es] final case class EsCountPartition(conf: EsScanConfig, wireQuery: Option[String])
+    extends InputPartition
+
+private[es] class EsReaderFactory(required: StructType, pushed: Array[Filter])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case c: EsCountPartition => new EsCountReader(c)
+      case p: EsPartition      => new EsPartitionReader(required, pushed, p)
+    }
+}
+
 /** One size-0 request answers a completely-pushed count(*). */
-private[es] class EsCountReader(part: EsPartition)
+private[es] class EsCountReader(part: EsCountPartition)
     extends PartitionReader[InternalRow] {
   private val conf = part.conf
   private var done = false
@@ -367,11 +423,9 @@ private[es] class EsCountReader(part: EsPartition)
     else {
       val transport = conf.transportFactory.open()
       try {
-        val p = EsApi.parsePage(
-          Retry.withBackoff(conf.retries, conf.retryBackoffMs, EsHttpError.transient) {
-            transport.post(s"/${conf.index}/_search",
-              EsApi.countBody(part.wireQuery))
-          })
+        val p = EsApi.readPage(conf.retried(conf.index)(
+          transport.postBytes(s"/${conf.index}/_search", EsApi.countBody(part.wireQuery))),
+          StructType(Nil))
         if (p.total < 0) throw new IllegalStateException(
           s"${conf.index}: server omitted hits.total on a count probe")
         row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -385,125 +439,29 @@ private[es] class EsCountReader(part: EsPartition)
   override def close(): Unit = ()
 }
 
-/** Drives one slice's search+scroll loop (reference :219-266), emitting
-  * coerced rows. Memory is one page of documents; the scroll id is the
+/** Drives one partition's walk (reference :219-266), emitting the coerced
+  * rows that pass the pushed filters. Memory is one page of documents;
+  * the walk's context id and, for PIT, the last hit's sort values are the
   * only cross-page state. */
-private[es] class EsScrollPartitionReader(
+private[es] class EsPartitionReader(
     required: StructType, pushed: Array[Filter], part: EsPartition)
     extends PartitionReader[InternalRow] {
+
+  import EsScrollSource.log
 
   private val conf = part.conf
   private val transport = conf.transportFactory.open()
   private val rowFilter = RowFilter(required, pushed.filter(RowFilter.supported))
-  private val sliceTag = part.slice.map { case (i, m) => s" slice $i/$m" }.getOrElse("")
-
-  private var scrollId: Option[String] = None
-  private var page: Iterator[InternalRow] = Iterator.empty
-  private var exhausted = false
-  private var total = -1L
-  private var readHits = 0L
-  private var pagesFetched = 0
-  private var current: InternalRow = _
-
-  // the decode stays outside the retry: re-posting a scroll id is not
-  // idempotent, so a body that fails to decode fails the slice
-  private def fetch(op: => Array[Byte]): EsApi.Page[InternalRow] =
-    EsApi.readPage(Retry.withBackoff(conf.retries, conf.retryBackoffMs,
-      EsHttpError.transient,
-      onRetry = (left, e) => EsScrollSource.log.warn(
-        s"${conf.index}$sliceTag: transient source error " +
-          s"($left attempts left): ${e.getMessage}"))(op), required)
-
-  private def nextPage(): Unit = {
-    // pushed limit = one-shot probe search: a single page is the whole
-    // result; never open or follow a scroll context
-    if (part.limit.isDefined && pagesFetched > 0) { exhausted = true; return }
-    // un-pushed over-window limit: this slice already has enough hits for
-    // any global cut — stop paging (LocalLimit at the source). Only set
-    // when no filters ride the reader, so hits == emitted rows.
-    if (part.stopAfter.exists(readHits >= _)) { exhausted = true; return }
-    val p = scrollId match {
-      case None =>
-        // initial search opens the scroll context (reference :219-226)
-        // — unless a limit was pushed, in which case it's a plain search
-        val scrollParam =
-          if (part.limit.isDefined) "" else s"?scroll=${conf.scroll}"
-        val body = EsApi.searchBody(conf.size, conf.sort, part.wireQuery,
-          part.sourceFields, part.slice, part.range)
-        fetch(transport.postBytes(s"/${conf.index}/_search$scrollParam", body))
-      case Some(id) =>
-        fetch(transport.postBytes("/_search/scroll",
-          EsApi.scrollBody(conf.scroll, id)))
-    }
-    if (pagesFetched == 0) {
-      total = p.total
-      if (total == 0) EsScrollSource.log.warn(
-        s"${conf.index}$sliceTag: no records found") // reference :238-240
-    }
-    pagesFetched += 1
-    if (part.limit.isEmpty) scrollId = p.scrollId.orElse(scrollId)
-    if (p.hits.isEmpty) exhausted = true
-    else {
-      readHits += p.hits.size
-      EsScrollSource.log.info(
-        s"${conf.index}$sliceTag: read $readHits/$total records") // :257
-      page = p.hits.iterator
-    }
-  }
-
-  @annotation.tailrec
-  final override def next(): Boolean =
-    if (page.hasNext) {
-      val row = page.next()
-      if (rowFilter(row)) { current = row; true } else next()
-    } else if (exhausted) false
-    else { nextPage(); next() }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = {
-    try scrollId.foreach { id =>
-      transport.delete("/_search/scroll", EsApi.clearScrollBody(id))
-    } catch {
-      case e: Exception => EsScrollSource.log.warn(
-        s"${conf.index}$sliceTag: clear scroll failed: ${e.getMessage}")
-    } finally transport.close()
-  }
-}
-
-/** Drives one slice's point-in-time + `search_after` walk — the ES 7.10+
-  * replacement for the scroll API the reference mirrors
-  * (dump-es-parquet:259-266). Same shape as the scroll reader — one page
-  * of documents in memory, a pruned `_source` list, in-reader coercion —
-  * with one structural improvement: the continuation cursor (the last
-  * hit's `sort` values) lives on the CLIENT. A scroll retry replays a
-  * server-side context that may have expired or lost its node; a PIT
-  * retry re-issues the same `search_after` request, so a mid-dump
-  * cluster flap resumes from the last sort key without re-reading (or
-  * double-reading) a single document.
-  *
-  * Ordering: `search_after` needs a total order, so the reader sorts by
-  * the configured keys (minus bare `_doc`, which is scroll-specific) plus
-  * the `_shard_doc` tiebreaker ES defines for exactly this purpose. Each
-  * slice opens its own PIT — the same per-partition independence as
-  * sliced scroll contexts, with no shared driver-side lifecycle to
-  * coordinate.
-  */
-private[es] class EsPitPartitionReader(
-    required: StructType, pushed: Array[Filter], part: EsPartition)
-    extends PartitionReader[InternalRow] {
-
-  private val conf = part.conf
-  private val transport = conf.transportFactory.open()
-  private val rowFilter = RowFilter(required, pushed.filter(RowFilter.supported))
-  private val sliceTag = part.slice.map { case (i, m) => s" slice $i/$m" }.getOrElse("")
+  private val tag = conf.index + part.slice.map { case (i, m) => s" slice $i/$m" }.getOrElse("")
 
   // _doc is the scroll API's "index order" pseudo-field; PIT pagination
   // keys on real sort values + the per-PIT-unique _shard_doc tiebreak
   private val sort: Seq[EsApi.Sort] =
-    conf.sort.filterNot(_.field == "_doc") :+ EsApi.Sort("_shard_doc", "asc")
+    if (part.walk == EsWalk.Pit)
+      conf.sort.filterNot(_.field == "_doc") :+ EsApi.Sort("_shard_doc", "asc")
+    else conf.sort
 
-  private var pitId: Option[String] = None
+  private var context: Option[String] = None // scroll id or PIT id
   private var cursor: Option[com.fasterxml.jackson.databind.JsonNode] = None
   private var page: Iterator[InternalRow] = Iterator.empty
   private var exhausted = false
@@ -513,51 +471,62 @@ private[es] class EsPitPartitionReader(
   private var pagesFetched = 0
   private var current: InternalRow = _
 
-  private def retried[T](op: => T): T =
-    Retry.withBackoff(conf.retries, conf.retryBackoffMs, EsHttpError.transient,
-      onRetry = (left, e) => EsScrollSource.log.warn(
-        s"${conf.index}$sliceTag: transient source error " +
-          s"($left attempts left): ${e.getMessage}"))(op)
+  /** Every walk's search body. Only the first PIT page asks for
+    * track_total_hits: without it ES7+ caps hits.total at 10k (relation:
+    * gte) and the progress denominator would understate every index past
+    * 10k documents; asking on every follow-up page would re-pay the
+    * exact-count traversal for a number already known. */
+  private def searchBody(pit: Option[String]): String =
+    EsApi.searchBody(conf.size, sort, part.wireQuery, part.sourceFields, part.slice,
+      part.range, pit.map((_, conf.scroll)), cursor,
+      trackTotal = pit.isDefined && pagesFetched == 0)
+
+  /** The next page's (path, body); a PIT walk opens its PIT first. */
+  private def nextRequest(): (String, String) = part.walk match {
+    case EsWalk.Probe => (s"/${conf.index}/_search", searchBody(None))
+    case EsWalk.Scroll => context match {
+      case None     => (s"/${conf.index}/_search?scroll=${conf.scroll}", searchBody(None))
+      case Some(id) => ("/_search/scroll", EsApi.scrollBody(conf.scroll, id))
+    }
+    case EsWalk.Pit =>
+      if (context.isEmpty) context = Some(EsApi.parsePitId(conf.retried(tag)(
+        transport.post(s"/${conf.index}/_pit?keep_alive=${conf.scroll}", ""))))
+      ("/_search", searchBody(context))
+  }
 
   private def nextPage(): Unit = {
+    // un-pushed over-window limit: this slice already has enough hits for
+    // any global cut — stop paging (LocalLimit at the source). Only set
+    // when no filters ride the reader, so hits == emitted rows.
     if (part.stopAfter.exists(readHits >= _)) { exhausted = true; return }
-    val id = pitId.getOrElse {
-      val opened = EsApi.parsePitId(retried(
-        transport.post(s"/${conf.index}/_pit?keep_alive=${conf.scroll}", "")))
-      pitId = Some(opened)
-      opened
-    }
-    // the retry wraps the whole page fetch: a flap mid-page re-sends the
-    // SAME body — same search_after — so no document is lost or repeated.
-    // Only the first page asks for track_total_hits: without it ES7+ caps
-    // hits.total at 10k (relation: gte) and the progress denominator
-    // would silently understate every index past 10k documents; asking on
-    // every follow-up page would re-pay the exact-count traversal for a
-    // number already known.
-    val p = EsApi.readPage(retried(transport.postBytes("/_search",
-      EsApi.searchBody(conf.size, sort, part.wireQuery, part.sourceFields,
-        part.slice, pit = Some((id, conf.scroll)), searchAfter = cursor,
-        trackTotal = pagesFetched == 0))), required)
+    val (path, body) = nextRequest()
+    // the decode stays outside the retry: re-posting a scroll id is not
+    // idempotent, so a body that fails to decode fails the slice. A PIT
+    // retry re-sends the SAME body — same search_after — so a flap
+    // mid-walk loses or repeats no document.
+    val p = EsApi.readPage(conf.retried(tag)(transport.postBytes(path, body)), required)
     if (pagesFetched == 0) {
       total = p.total
-      // defensive: a server that ignores track_total_hits still reports
-      // relation != eq — log the bound as a bound, never as the total
+      // a server that ignores track_total_hits still reports relation !=
+      // eq — log the bound as a bound, never as the total
       totalExact = p.totalRelation.forall(_ == "eq")
-      if (total == 0) EsScrollSource.log.warn(
-        s"${conf.index}$sliceTag: no records found")
+      if (total == 0) log.warn(s"$tag: no records found") // reference :238-240
     }
     pagesFetched += 1
-    p.pitId.foreach(refreshed => pitId = Some(refreshed)) // server may rotate it
-    if (p.hits.isEmpty) exhausted = true
-    else {
-      cursor = p.lastSort.orElse(
+    part.walk match {
+      case EsWalk.Probe  => ()
+      case EsWalk.Scroll => context = p.scrollId.orElse(context)
+      case EsWalk.Pit    => context = p.pitId.orElse(context) // server may rotate it
+    }
+    exhausted = p.hits.isEmpty || part.walk == EsWalk.Probe
+    if (p.hits.nonEmpty) {
+      if (part.walk == EsWalk.Pit) cursor = p.lastSort.orElse(
         throw new IllegalStateException(
-          s"${conf.index}$sliceTag: PIT page carried hits but no sort values — " +
+          s"$tag: PIT page carried hits but no sort values — " +
             "server does not support search_after pagination"))
       readHits += p.hits.size
       val denom = if (totalExact) s"/$total" else s"/≥$total"
-      EsScrollSource.log.info(
-        s"${conf.index}$sliceTag: read $readHits$denom records")
+      log.info(s"$tag: read $readHits$denom records") // reference :257
       page = p.hits.iterator
     }
   }
@@ -573,11 +542,11 @@ private[es] class EsPitPartitionReader(
   override def get(): InternalRow = current
 
   override def close(): Unit = {
-    try pitId.foreach { id =>
-      transport.delete("/_pit", EsApi.deletePitBody(id))
+    try context.foreach { id =>
+      if (part.walk == EsWalk.Pit) transport.delete("/_pit", EsApi.deletePitBody(id))
+      else transport.delete("/_search/scroll", EsApi.clearScrollBody(id))
     } catch {
-      case e: Exception => EsScrollSource.log.warn(
-        s"${conf.index}$sliceTag: close PIT failed: ${e.getMessage}")
+      case e: Exception => log.warn(s"$tag: closing the ${part.walk} context failed: ${e.getMessage}")
     } finally transport.close()
   }
 }

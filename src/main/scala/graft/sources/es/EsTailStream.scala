@@ -5,8 +5,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.Retry
-
 /** Continuous tail-ingest over a live index — the streaming counterpart
   * of the batch scroll source, for the pipeline the reference runs as a
   * periodic re-dump cron (its scroll is a point-in-time snapshot; this is
@@ -19,8 +17,9 @@ import graft.sources.Retry
   *   - `latestOffset` asks the cluster for `max(tail_field)` with a
   *     size-0 aggregation — one tiny request, no documents move;
   *   - the microbatch reads the window `(start, end]` as a structured
-  *     range filter on the same sliced-scroll partition readers as the
-  *     batch path (all pushdowns, coercion, and retry behavior included);
+  *     range filter, planned and read like a batch scan in the configured
+  *     `mode` (scroll or PIT; all pushdowns, coercion, and retry behavior
+  *     included);
   *   - offsets checkpoint as the plain numeric value, so a restarted
   *     query resumes from the committed watermark.
   *
@@ -51,13 +50,8 @@ private[es] class EsTailStream(required: StructType, conf: EsScanConfig,
   // fires every trigger — opening a client per probe is wasted setup)
   private lazy val transport = conf.transportFactory.open()
 
-  private def fetchMax(): Option[Double] = {
-    val resp = Retry.withBackoff(conf.retries, conf.retryBackoffMs,
-      EsHttpError.transient) {
-      transport.post(s"/${conf.index}/_search", EsApi.maxAggBody(field))
-    }
-    EsApi.parseMaxAgg(resp)
-  }
+  private def fetchMax(): Option[Double] = EsApi.parseMaxAgg(conf.retried(conf.index)(
+    transport.post(s"/${conf.index}/_search", EsApi.maxAggBody(field))))
 
   override def initialOffset(): Offset = EsTailOffset(conf.startFrom.toDouble)
 
@@ -70,15 +64,7 @@ private[es] class EsTailStream(required: StructType, conf: EsScanConfig,
     val s = start.asInstanceOf[EsTailOffset].value
     val e = end.asInstanceOf[EsTailOffset].value
     if (e <= s) Array.empty
-    else {
-      val wireQuery = EsQuery.combine(conf.query, pushed.toIndexedSeq)
-      val fields = Some(required.fieldNames.toSeq) // Nil → `_source: false`
-      (0 until conf.slices).map { i =>
-        val slice = if (conf.slices > 1) Some((i, conf.slices)) else None
-        EsPartition(conf, wireQuery, fields, slice,
-          range = Some((field, s, e))): InputPartition
-      }.toArray
-    }
+    else EsPartition.plan(required, conf, pushed, conf.mode, range = Some((field, s, e)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -39,8 +39,8 @@ object StreamDump {
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
       .parquet(srcDir)
     val transformed = DumpJob.transform(src, config.dump)
-    val out = if (config.dump.rawJson) transformed.toJSON.toDF("value") else transformed
-    val format = if (config.dump.rawJson) "text" else config.dump.sink.format
+    val format = config.dump.sink.format
+    val out = if (format == "text") transformed.toJSON.toDF("value") else transformed
     val writer = out.writeStream
       .format(format)
       .option("path", outDir)

@@ -17,7 +17,7 @@ class JsonlSourceSpec extends SparkSpec {
   test("DSv2 round-trip: raw dump read back typed through in-reader coercion") {
     val out = Files.createTempDirectory("jsonl_src").toString
     DumpJob.run(spark, sf(), out, DumpJob.Config(
-      pattern = "nation", rawJson = true, sink = Sink.Config(format = "text")))
+      pattern = "nation", sink = Sink.Config(format = "text")))
     val schema = StructType(Seq(
       StructField("n_nationkey", LongType),
       StructField("n_name", StringType),
@@ -31,7 +31,7 @@ class JsonlSourceSpec extends SparkSpec {
   test("column pruning reaches the reader (only projected fields coerced)") {
     val out = Files.createTempDirectory("jsonl_prune").toString
     DumpJob.run(spark, sf(), out, DumpJob.Config(
-      pattern = "region", rawJson = true, sink = Sink.Config(format = "text")))
+      pattern = "region", sink = Sink.Config(format = "text")))
     val schema = StructType(Seq(
       StructField("r_regionkey", LongType), StructField("r_name", StringType)))
     val df = spark.read.format("graft-jsonl").schema(schema).load(s"$out/region")
@@ -131,7 +131,7 @@ class JsonlSourceSpec extends SparkSpec {
   test("schema-on-read fallback infers string fields from the first document") {
     val out = Files.createTempDirectory("jsonl_infer").toString
     DumpJob.run(spark, sf(), out, DumpJob.Config(
-      pattern = "region", rawJson = true, sink = Sink.Config(format = "text")))
+      pattern = "region", sink = Sink.Config(format = "text")))
     val df = spark.read.format("graft-jsonl").load(s"$out/region")
     assert(df.schema.fields.forall(_.dataType == StringType))
     assert(df.columns.contains("r_name") && df.count() == 5)

@@ -327,17 +327,24 @@ class EsScrollSourceSpec extends SparkSpec {
   }
 
   test("over-window limit still stops the scroll early (LocalLimit at the source)") {
-    withServer() { server =>
-      // shrink the window so a 12-row limit is 'too big to probe' at 23
-      // docs: the scroll must page only until it has >=12 hits (size=5 ->
-      // 3 pages), not walk the whole index
-      val df = read(server, "max_result_window" -> "10").limit(12)
-      val scan = pushedScan(df)
-      assert(scan.pushedLimit.isEmpty && scan.scrollStop.contains(12))
-      assert(df.count() == 12)
-      val scrolls = server.requests.asScala.count(r =>
-        r._1 == "POST" && r._2 == "/_search/scroll")
-      assert(scrolls <= 2, s"slice must stop paging once it has 12 hits, saw $scrolls scroll calls")
+    // shrink the window so a 12-row limit is 'too big to probe' at 23
+    // docs: the walk must page only until it has >=12 hits (size=5 ->
+    // 3 pages), not walk the whole index
+    for (mode <- Seq("scroll", "pit")) withClue(s"mode=$mode: ") {
+      withServer() { server =>
+        val df = read(server, "max_result_window" -> "10", "mode" -> mode).limit(12)
+        val scan = pushedScan(df)
+        assert(scan.pushedLimit.isEmpty && scan.scrollStop.contains(12))
+        assert(df.count() == 12)
+        if (mode == "scroll") {
+          val scrolls = server.requests.asScala.count(r =>
+            r._1 == "POST" && r._2 == "/_search/scroll")
+          assert(scrolls <= 2, s"slice must stop paging once it has 12 hits, saw $scrolls scroll calls")
+        } else {
+          val pages = pitSearches(server).size
+          assert(pages <= 3, s"slice must stop paging once it has 12 hits, saw $pages PIT searches")
+        }
+      }
     }
   }
 
@@ -449,13 +456,18 @@ class EsScrollSourceSpec extends SparkSpec {
   }
 
   test("invalid mode option is rejected loudly") {
-    withServer() { server =>
-      val e = intercept[Exception] { read(server, "mode" -> "warp").collect() }
-      def named(t: Throwable): Boolean =
+    // a bad mode, and any of slices/size/retries below 1 (0 slices would
+    // plan no partition and dump an empty table as written)
+    val bad = Seq("mode" -> "warp" -> "'warp'", "slices" -> "0" -> "'slices'",
+      "size" -> "0" -> "'size'", "retries" -> "0" -> "'retries'", "slices" -> "-2" -> "'slices'")
+    for ((option, named) <- bad) withServer() { server =>
+      val e = intercept[Exception] { read(server, option).collect() }
+      def names(t: Throwable): Boolean =
         if (t == null) false
-        else if (Option(t.getMessage).exists(_.contains("'warp'"))) true
-        else named(t.getCause)
-      assert(named(e), s"error must name the bad mode, got $e")
+        else if (t.isInstanceOf[IllegalArgumentException] &&
+          Option(t.getMessage).exists(_.contains(named))) true
+        else names(t.getCause)
+      assert(names(e), s"error must name $named, got $e")
     }
   }
 

@@ -13,32 +13,37 @@ class EsTailStreamSpec extends SparkSpec {
   private def doc(seq: Int) = s"""{"seq":$seq,"msg":"m$seq"}"""
 
   test("tail stream reads each document exactly once across live ingests") {
-    val stub = new StubEsServer(
-      initialIndices = Map("logs" -> (1 to 5).map(doc)),
-      mappings = Map("logs" -> mapping))
-    try {
-      val df = spark.readStream.format("graft-es")
-        .option("es", stub.url).option("index", "logs")
-        .option("tail_field", "seq")
-        .option("size", 2) // several scroll pages per microbatch
-        .load()
-      val query = df.writeStream.format("memory").queryName("es_tail").start()
+    // both walks must send the (start, end] window, or every microbatch
+    // re-reads the whole index
+    for (mode <- Seq("scroll", "pit")) withClue(s"mode=$mode: ") {
+      val stub = new StubEsServer(
+        initialIndices = Map("logs" -> (1 to 5).map(doc)),
+        mappings = Map("logs" -> mapping))
       try {
-        def seqs = spark.table("es_tail").select($"seq").as[Long]
-          .collect().toSeq.sorted
-        query.processAllAvailable()
-        assert(seqs == (1L to 5L), s"initial backfill, got $seqs")
-        stub.addDocs("logs", Seq(doc(6), doc(7)))
-        query.processAllAvailable()
-        assert(seqs == (1L to 7L), s"live ingest appended exactly once, got $seqs")
-        // idle trigger: no new max -> empty window -> no duplicates
-        query.processAllAvailable()
-        assert(seqs == (1L to 7L))
-        // the coerced payload came through the same MapSource path
-        assert(spark.table("es_tail").where($"seq" === 6)
-          .select($"msg").as[String].head() == "m6")
-      } finally query.stop()
-    } finally stub.close()
+        val df = spark.readStream.format("graft-es")
+          .option("es", stub.url).option("index", "logs")
+          .option("tail_field", "seq")
+          .option("size", 2) // several pages per microbatch
+          .option("mode", mode)
+          .load()
+        val query = df.writeStream.format("memory").queryName(s"es_tail_$mode").start()
+        try {
+          def seqs = spark.table(s"es_tail_$mode").select($"seq").as[Long]
+            .collect().toSeq.sorted
+          query.processAllAvailable()
+          assert(seqs == (1L to 5L), s"initial backfill, got $seqs")
+          stub.addDocs("logs", Seq(doc(6), doc(7)))
+          query.processAllAvailable()
+          assert(seqs == (1L to 7L), s"live ingest appended exactly once, got $seqs")
+          // idle trigger: no new max -> empty window -> no duplicates
+          query.processAllAvailable()
+          assert(seqs == (1L to 7L))
+          // the coerced payload came through the same MapSource path
+          assert(spark.table(s"es_tail_$mode").where($"seq" === 6)
+            .select($"msg").as[String].head() == "m6")
+        } finally query.stop()
+      } finally stub.close()
+    }
   }
 
   test("start_from resumes after the given watermark") {

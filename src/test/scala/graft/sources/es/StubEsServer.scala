@@ -25,7 +25,8 @@ import scala.jdk.CollectionConverters._
   *  - `_source` include lists are honored (projection reaches the wire)
   *  - `addDocs` appends documents live (the tail-source suite's ingest)
   *  - size-0 `max` aggregations and structured numeric `range` queries
-  *    are evaluated (the tail source's offset probe + batch windows)
+  *    are evaluated (the tail source's offset probe + batch windows, on
+  *    scroll and PIT searches alike)
   *  - point-in-time contexts: `POST /{idx}/_pit` snapshots the index,
   *    index-less `POST /_search` with `pit.id` pages it via
   *    `search_after` (sort values emitted per hit, `_shard_doc`
@@ -39,7 +40,7 @@ final class StubEsServer(
     legacyDocType: Boolean = false,
     // real ES7+ caps hits.total at 10,000 (`relation: gte`) unless the
     // request sets track_total_hits — lowered in tests to pin that the
-    // PIT reader actually asks for the exact count
+    // PIT walk actually asks for the exact count
     totalHitsCap: Int = 10000) extends AutoCloseable {
 
   private val mapper = new ObjectMapper()
@@ -184,21 +185,7 @@ final class StubEsServer(
           if (vals.isEmpty) m.putNull("value") else m.put("value", vals.max)
           respond(ex, 200, mapper.writeValueAsString(root))
         } else {
-        // structured numeric range filter (query.range or query.bool.filter)
-        val rangeNode = Seq("/query/range", "/query/bool/filter/0/range")
-          .map(req.at).find(!_.isMissingNode)
-        val all = rangeNode match {
-          case Some(r) =>
-            val f = r.fieldNames().asScala.next()
-            val spec = r.get(f)
-            val gt = Option(spec.get("gt")).map(_.asDouble()).getOrElse(Double.NegativeInfinity)
-            val lte = Option(spec.get("lte")).map(_.asDouble()).getOrElse(Double.PositiveInfinity)
-            stored.filter { d =>
-              Option(d.get(f)).filter(_.isNumber).map(_.asDouble())
-                .exists(v => v > gt && v <= lte)
-            }
-          case None => stored
-        }
+        val all = stored.filter(inRange(req))
         // honor the first non-_doc sort clause (numeric or text, with
         // ES `missing` placement) — the TopN-pushdown suite's surface
         val sorted = Option(req.get("sort")).map(_.elements().asScala.toList) match {
@@ -263,15 +250,32 @@ final class StubEsServer(
     }
   }
 
-  /** PIT + search_after search over an open snapshot: honors sort clauses
-    * (field order + the `_shard_doc` position tiebreak), slice, the
+  /** A search's structured numeric range filter (`query.range` or
+    * `query.bool.filter`) as a document predicate; without one every
+    * document passes. */
+  private def inRange(req: com.fasterxml.jackson.databind.JsonNode): ObjectNode => Boolean =
+    Seq("/query/range", "/query/bool/filter/0/range").map(req.at).find(!_.isMissingNode) match {
+      case Some(r) =>
+        val f = r.fieldNames().asScala.next()
+        val spec = r.get(f)
+        val gt = Option(spec.get("gt")).map(_.asDouble()).getOrElse(Double.NegativeInfinity)
+        val lte = Option(spec.get("lte")).map(_.asDouble()).getOrElse(Double.PositiveInfinity)
+        d => Option(d.get(f)).filter(_.isNumber).map(_.asDouble())
+          .exists(v => v > gt && v <= lte)
+      case None => _ => true
+    }
+
+  /** PIT + search_after search over an open snapshot: honors the range
+    * filter, sort clauses (field order + the `_shard_doc` position
+    * tiebreak), slice, the
     * `search_after` cursor (match-previous-page's-last-sort-values, then
     * take what follows), `_source` projection, and size; every hit carries
     * its `sort` array like real ES. */
   private def pitSearch(req: com.fasterxml.jackson.databind.JsonNode,
                         pitId: String, snapshot: List[ObjectNode]): String = {
     val size = Option(req.get("size")).map(_.asInt).getOrElse(10)
-    val positioned = snapshot.zipWithIndex
+    val keep = inRange(req)
+    val positioned = snapshot.zipWithIndex.filter { case (d, _) => keep(d) }
     val sliced = Option(req.get("slice")) match {
       case Some(s) =>
         val (id, max) = (s.get("id").asInt, s.get("max").asInt)

@@ -47,7 +47,7 @@ class RowFilterSpec extends SparkSpec {
     import spark.implicits._
     val out = Files.createTempDirectory("jsonl_filter").toString
     DumpJob.run(spark, sf(), out, DumpJob.Config(
-      pattern = "nation", rawJson = true, sink = Sink.Config(format = "text")))
+      pattern = "nation", sink = Sink.Config(format = "text")))
     val st = StructType(Seq(
       StructField("n_nationkey", LongType), StructField("n_regionkey", LongType)))
 

@@ -49,7 +49,7 @@ class StreamDumpSpec extends SparkSpec {
 
     val q = StreamDump.start(spark, src, out, ckpt, StreamDump.Config(
       schema = spark.read.parquet(src).schema,
-      dump = DumpJob.Config(rawJson = true, sink = Sink.Config(format = "text"))))
+      dump = DumpJob.Config(sink = Sink.Config(format = "text"))))
     q.awaitTermination(60000)
 
     val lines = spark.read.text(out).as[String].collect().sorted
