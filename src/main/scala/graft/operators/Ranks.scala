@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: (score desc, id asc) is the engine's standard total
   * order (ids unique within a ranking), and `array_sort` on structs
-  * compares fields left to right, so `(-score, id)` ascending is the
-  * identical order — double negation is exact, and the payload struct
-  * is never reached by the comparison. Scores and ids must be
-  * non-null (true for every computed ranking this serves). */
+  * compares fields left to right, so `(isnull(score), !isnan(score),
+  * -score, id)` ascending is the identical order — double negation is
+  * exact, a null score ranks last and a NaN first, as `desc` puts them
+  * (`negate` alone would sort null first and NaN last), and the payload
+  * struct is never reached by the comparison. Ids must be non-null. */
 object Ranks {
 
   /** Append `rankCol` = 1-based rank by (`scoreCol` desc, `idCol` asc),
@@ -33,7 +34,9 @@ object Ranks {
   def byScoreDesc(df: DataFrame, scoreCol: String, idCol: String,
                   rankCol: String = "rank"): DataFrame = {
     val payload = struct(df.columns.map(col): _*).as("__graft_rk_row")
-    val keyed = struct(negate(col(scoreCol)).as("__graft_rk_s"),
+    val keyed = struct(isnull(col(scoreCol)).as("__graft_rk_n"),
+      not(isnan(col(scoreCol))).as("__graft_rk_f"),
+      negate(col(scoreCol)).as("__graft_rk_s"),
       col(idCol).as("__graft_rk_i"), payload)
     df.agg(collect_list(keyed).as("__graft_rk_a"))
       .select(posexplode(array_sort(col("__graft_rk_a")))

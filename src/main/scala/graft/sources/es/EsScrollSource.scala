@@ -37,10 +37,21 @@ import graft.sources.jsonl.RowFilter
   *    `_source` include list, so unprojected fields never leave the
   *    cluster (P2); translatable filters become a query_string clause
   *    (P1, EsQuery) and every filter stays residual for Spark to re-check;
+  *  - a walk ends on the exact `hits.total` of its first page: the page
+  *    that brings the hits read up to it is the last one requested, where
+  *    the reference asks until a page comes back empty (:262-264) — one
+  *    more round trip per slice that can only return nothing. An inexact
+  *    (`gte`) or missing total keeps the reference's empty-page end, and
+  *    an empty page short of an exact total fails the slice instead of
+  *    ending it quietly short;
   *  - every request is retried through `EsScanConfig.retried` (S4) with
   *    the reference's transient-transport-error semantics (:227-230),
-  *    the page decode staying outside the retry, and the scroll or PIT
-  *    context is closed with the reader.
+  *    except a `_search/scroll` continuation: the server advances its
+  *    cursor before it answers, so that is retried only on failures the
+  *    server did not act on (429, 503, connection refused) and any other
+  *    fails the slice rather than skip a page. The page decode stays
+  *    outside the retry, and the scroll or PIT context is closed with the
+  *    reader.
   *
   * Usage:
   * {{{
@@ -110,10 +121,12 @@ private[es] final case class EsScanConfig(
   def transportFactory: EsTransportFactory = HttpTransportFactory(http)
 
   /** Every ES call's retry (S4): `retries` attempts `retryBackoffMs`
-    * apart on the reference's transient transport errors (:227-230), each
-    * retry logged against `what`. */
-  def retried[T](what: String)(op: => T): T =
-    Retry.withBackoff(retries, retryBackoffMs, EsHttpError.transient,
+    * apart on the reference's transient transport errors (:227-230), or
+    * on the narrower `retryable` of a request that must not be re-sent
+    * once the server acted on it, each retry logged against `what`. */
+  def retried[T](what: String, retryable: Throwable => Boolean = EsHttpError.transient)(
+      op: => T): T =
+    Retry.withBackoff(retries, retryBackoffMs, retryable,
       onRetry = (left, e) => EsScrollSource.log.warn(
         s"$what: transient source error ($left attempts left): ${e.getMessage}"))(op)
 }
@@ -442,7 +455,20 @@ private[es] class EsCountReader(part: EsCountPartition)
 /** Drives one partition's walk (reference :219-266), emitting the coerced
   * rows that pass the pushed filters. Memory is one page of documents;
   * the walk's context id and, for PIT, the last hit's sort values are the
-  * only cross-page state. */
+  * only cross-page state.
+  *
+  * End rule: a scroll or PIT walk stops once the hits read reach the
+  * first page's exact total (`relation: eq`, or an ES6 bare int; scroll
+  * searches always count exactly on ES7+, and the first PIT page asks
+  * `track_total_hits`), so no empty terminal page is requested. Without
+  * an exact total it reads until a page comes back empty, as the
+  * reference does (:262-264). An empty page before an exact total is
+  * reached throws, naming both counts. A probe is always one page.
+  *
+  * Retry rule: an opening search, a probe and a PIT page re-send safely,
+  * so they retry on every transient error; a `_search/scroll`
+  * continuation retries only where the server did not advance
+  * (`EsHttpError.unadvanced`). */
 private[es] class EsPartitionReader(
     required: StructType, pushed: Array[Filter], part: EsPartition)
     extends PartitionReader[InternalRow] {
@@ -465,8 +491,8 @@ private[es] class EsPartitionReader(
   private var cursor: Option[com.fasterxml.jackson.databind.JsonNode] = None
   private var page: Iterator[InternalRow] = Iterator.empty
   private var exhausted = false
-  private var total = -1L
-  private var totalExact = true
+  private var total = -1L // the first page's hits.total; -1 when it sent none
+  private var totalExact = false
   private var readHits = 0L
   private var pagesFetched = 0
   private var current: InternalRow = _
@@ -501,15 +527,18 @@ private[es] class EsPartitionReader(
     if (part.stopAfter.exists(readHits >= _)) { exhausted = true; return }
     val (path, body) = nextRequest()
     // the decode stays outside the retry: re-posting a scroll id is not
-    // idempotent, so a body that fails to decode fails the slice. A PIT
-    // retry re-sends the SAME body — same search_after — so a flap
-    // mid-walk loses or repeats no document.
-    val p = EsApi.readPage(conf.retried(tag)(transport.postBytes(path, body)), required)
+    // idempotent, so a body that fails to decode fails the slice, and so
+    // does any send failure the server may have acted on. A PIT retry
+    // re-sends the SAME body — same search_after — so a flap mid-walk
+    // loses or repeats no document.
+    val retryable =
+      if (path == "/_search/scroll") EsHttpError.unadvanced _ else EsHttpError.transient _
+    val p = EsApi.readPage(conf.retried(tag, retryable)(transport.postBytes(path, body)), required)
     if (pagesFetched == 0) {
       total = p.total
       // a server that ignores track_total_hits still reports relation !=
       // eq — log the bound as a bound, never as the total
-      totalExact = p.totalRelation.forall(_ == "eq")
+      totalExact = total >= 0 && p.totalRelation.forall(_ == "eq")
       if (total == 0) log.warn(s"$tag: no records found") // reference :238-240
     }
     pagesFetched += 1
@@ -518,17 +547,20 @@ private[es] class EsPartitionReader(
       case EsWalk.Scroll => context = p.scrollId.orElse(context)
       case EsWalk.Pit    => context = p.pitId.orElse(context) // server may rotate it
     }
-    exhausted = p.hits.isEmpty || part.walk == EsWalk.Probe
+    if (p.hits.isEmpty && totalExact && readHits < total && part.walk != EsWalk.Probe)
+      throw new IllegalStateException(
+        s"$tag: walk ended after $readHits of its $total hits")
     if (p.hits.nonEmpty) {
       if (part.walk == EsWalk.Pit) cursor = p.lastSort.orElse(
         throw new IllegalStateException(
           s"$tag: PIT page carried hits but no sort values — " +
             "server does not support search_after pagination"))
       readHits += p.hits.size
-      val denom = if (totalExact) s"/$total" else s"/≥$total"
+      val denom = if (total < 0) "" else if (totalExact) s"/$total" else s"/≥$total"
       log.info(s"$tag: read $readHits$denom records") // reference :257
       page = p.hits.iterator
     }
+    exhausted = part.walk == EsWalk.Probe || p.hits.isEmpty || (totalExact && readHits >= total)
   }
 
   @annotation.tailrec

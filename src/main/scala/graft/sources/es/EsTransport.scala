@@ -45,6 +45,17 @@ object EsHttpError {
     case _: java.io.IOException  => true
     case _                       => false
   }
+
+  /** The retry predicate for a request that advances a server-side cursor
+    * (a `_search/scroll` continuation): only failures the server answered
+    * without acting on (429, 503) or never received (connection refused).
+    * After a timeout, a reset or a 500 the cursor may already have moved,
+    * and re-posting the same scroll id would return the NEXT page. */
+  def unadvanced(t: Throwable): Boolean = t match {
+    case e: EsHttpError              => e.status == 429 || e.status == 503
+    case _: java.net.ConnectException => true
+    case _                           => false
+  }
 }
 
 /** Connection settings — the reference's CLI surface

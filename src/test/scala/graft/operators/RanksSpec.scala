@@ -34,6 +34,17 @@ class RanksSpec extends SparkSpec {
     assert(ours.collect().toSeq == ref.orderBy($"rank").collect().toSeq)
   }
 
+  test("null scores rank last and NaN first, by id, as the desc window puts them") {
+    val df = Seq[(Long, Option[Double])]((4L, None), (2L, Some(0.5)), (1L, None),
+      (3L, Some(0.9)), (5L, Some(0.5)), (7L, Some(Double.NaN)), (6L, Some(Double.NaN)))
+      .toDF("id", "score")
+    val ours = Ranks.byScoreDesc(df, "score", "id")
+    val ref = df.withColumn("rank",
+      row_number().over(Window.orderBy($"score".desc, $"id".asc)).cast("long"))
+    assert(ours.collect().toSeq == ref.orderBy($"rank").collect().toSeq)
+    assert(ours.select($"id").as[Long].collect().toSeq == Seq(6L, 7L, 3L, 2L, 5L, 1L, 4L))
+  }
+
   test("empty frame ranks to an empty frame") {
     assert(Ranks.byScoreDesc(topk.where(lit(false)), "score", "id")
       .collect().isEmpty)

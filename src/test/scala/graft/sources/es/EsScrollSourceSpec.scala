@@ -53,7 +53,8 @@ class EsScrollSourceSpec extends SparkSpec {
       assert(byId(7).getString(1) == "doc7")
       assert(byId(7).getFloat(2) == 7.5f)        // "7.5" string -> float
       assert(byId(7).getString(3) == "t7")       // list -> first element (T2)
-      // 23 docs at size 5 = 5 pages + the empty terminator
+      // 23 docs at size 5 = the opening search + 4 scroll pages; the exact
+      // total ends the walk, so no empty terminal page follows
       val scrolls = server.requests.asScala.count(r =>
         r._1 == "POST" && r._2 == "/_search/scroll")
       assert(scrolls >= 4, s"expected paged scroll, saw $scrolls scroll calls")
@@ -217,32 +218,129 @@ class EsScrollSourceSpec extends SparkSpec {
     } finally server.close()
   }
 
-  /** A cut body fails on the parser's end-of-input error, not elsewhere. */
-  private def cutBody(t: Throwable): Boolean =
-    t != null && (t.isInstanceOf[com.fasterxml.jackson.core.io.JsonEOFException] ||
-      cutBody(t.getCause))
+  /** Whether `p` holds for `t` or anything in its cause chain. */
+  private def causedBy(p: Throwable => Boolean)(t: Throwable): Boolean =
+    t != null && (p(t) || causedBy(p)(t.getCause))
 
-  test("truncated page: the table fails whole, no file shows, the others are written") {
+  /** A cut body fails on the parser's end-of-input error, not elsewhere. */
+  private val cutBody =
+    causedBy(_.isInstanceOf[com.fasterxml.jackson.core.io.JsonEOFException]) _
+
+  /** Dumps `logs-*` (logs-2024.01: 23 docs, then logs-2024.02: 9) at size
+    * 7 with the fault `arm` sets up for the run's first walk, and checks
+    * that the faulted table fails whole: `Failed` with `cause` in its
+    * chain, no logs-2024.01 file visible, the other index written.
+    * Returns the stub's requests. */
+  private def faultFailsTableWhole(timeoutSec: Int = 60)(arm: StubEsServer => Unit)(
+      cause: Throwable => Boolean): Seq[(String, String, String)] = {
     val server = new StubEsServer(
       Map("logs-2024.01" -> (0 until 23).map(doc), "logs-2024.02" -> (0 until 9).map(doc)),
       Map("logs-2024.01" -> props, "logs-2024.02" -> props))
     try {
-      val out = java.nio.file.Files.createTempDirectory("es_cut")
-      val cat = EsCatalog(EsHttpConfig(baseUrl = server.url),
+      val out = java.nio.file.Files.createTempDirectory("es_fault")
+      val cat = EsCatalog(EsHttpConfig(baseUrl = server.url, timeoutSec = timeoutSec),
         readOptions = Map("size" -> "7", "retries" -> "2", "retry_backoff_ms" -> "1"))
-      // the first search of the run is the first page of logs-2024.01
-      server.truncateNext(1)
+      arm(server)
       val results = graft.DumpJob.run(spark, cat, out.toString,
         graft.DumpJob.Config(pattern = "logs-*"))
       assert(results.map(r => r.table -> r.getClass.getSimpleName) ==
         Seq("logs-2024.01" -> "Failed", "logs-2024.02" -> "Written"), results)
-      results.collect { case f: graft.DumpJob.Failed => assert(cutBody(f.error), f.error) }
+      results.collect { case f: graft.DumpJob.Failed => assert(cause(f.error), f.error) }
       val visible = java.nio.file.Files.walk(out).iterator().asScala
         .filter(java.nio.file.Files.isRegularFile(_))
         .map(_.getFileName.toString).toSeq
       assert(!visible.exists(_.startsWith("logs-2024.01")), visible)
       assert(visible.exists(_.startsWith("logs-2024.02")), visible)
+      server.requests.asScala.toSeq
     } finally server.close()
+  }
+
+  test("truncated page: the table fails whole, no file shows, the others are written") {
+    // the first search of the run is the first page of logs-2024.01
+    faultFailsTableWhole()(_.truncateNext(1))(cutBody)
+  }
+
+  test("scroll page slower than the timeout: the table fails whole, no file shows") {
+    // the first scroll continuation answers after the 1 s timeout, its
+    // cursor already advanced: a retry would return the next page
+    faultFailsTableWhole(timeoutSec = 1)(_.delayNext(1, 2500))(
+      causedBy(_.isInstanceOf[java.net.http.HttpTimeoutException]))
+  }
+
+  test("scroll context expired mid-dump: the 404 is posted once, the table fails whole") {
+    val requests = faultFailsTableWhole()(_.expireNext(1))(causedBy {
+      case e: EsHttpError => e.status == 404
+      case _ => false
+    })
+    // stub-scroll-1 is logs-2024.01's context: one continuation, no retry
+    val expired = requests.filter(r => r._2 == "/_search/scroll" &&
+      r._1 == "POST" && r._3.contains("\"stub-scroll-1\""))
+    assert(expired.size == 1, s"an expired context must not be retried: $expired")
+  }
+
+  test("scroll page slower than the timeout: a read throws, the page is never skipped") {
+    withServer() { server =>
+      server.delayNext(1, 2500) // the first continuation, after its cursor moved
+      val e = intercept[Exception](read(server, "timeout" -> "1").select($"id").collect())
+      assert(causedBy(_.isInstanceOf[java.net.http.HttpTimeoutException])(e), e)
+      val scrolls = server.requests.asScala.count(r =>
+        r._1 == "POST" && r._2 == "/_search/scroll")
+      assert(scrolls == 1, "a continuation the server may have advanced is posted once")
+    }
+  }
+
+  test("PIT page slower than the timeout is retried: every row exactly once") {
+    withServer() { server =>
+      server.delayNext(1, 2500) // the first PIT page
+      val ids = read(server, "mode" -> "pit", "timeout" -> "1")
+        .select($"id").as[Long].collect().sorted.toSeq
+      assert(ids == (0L until 23L))
+      assert(pitSearches(server).size == 6, "5 pages + the timed-out attempt")
+    }
+  }
+
+  /** The page requests of a walk: scroll opens and continuations, or PIT
+    * searches. */
+  private def pageRequests(server: StubEsServer, mode: String): Seq[(String, String, String)] =
+    if (mode == "pit") pitSearches(server)
+    else server.requests.asScala.toSeq.filter { case (method, uri, _) =>
+      method == "POST" && (uri.contains("/_search?scroll=") || uri == "/_search/scroll")
+    }
+
+  test("exact totals end each walk at its last hit: one request per non-empty page") {
+    for (mode <- Seq("scroll", "pit"); slices <- Seq(1, 3); n <- Seq(20, 23))
+      withClue(s"mode=$mode slices=$slices docs=$n: ") {
+        withServer(docs = (0 until n).map(doc)) { server =>
+          val ids = read(server, "mode" -> mode, "slices" -> slices.toString)
+            .select($"id").as[Long].collect().sorted.toSeq
+          assert(ids == (0L until n.toLong))
+          // the stub's slice i holds positions i, i + slices, ...; size=5
+          val pages = (0 until slices).map(i => ((n - i + slices - 1) / slices + 4) / 5).sum
+          assert(pageRequests(server, mode).size == pages)
+        }
+      }
+  }
+
+  test("an inexact first-page total still walks to the empty page, every row read") {
+    for (mode <- Seq("scroll", "pit")) withClue(s"mode=$mode: ") {
+      withServer(totalHitsCap = 4) { server =>
+        server.ignoreTrackTotalHits() // the first page says "at least 4"
+        val ids = read(server, "mode" -> mode).select($"id").as[Long].collect().sorted.toSeq
+        assert(ids == (0L until 23L))
+        assert(pageRequests(server, mode).size == 6, "5 pages + the empty one")
+      }
+    }
+  }
+
+  test("a walk that meets the empty page short of its exact total fails, naming both counts") {
+    for (mode <- Seq("scroll", "pit")) withClue(s"mode=$mode: ") {
+      withServer() { server =>
+        server.dropNext(1) // one page of 5 vanishes: the walk reads 18 of 23
+        val e = intercept[Exception](read(server, "mode" -> mode).select($"id").collect())
+        assert(causedBy(t => t.isInstanceOf[IllegalStateException] &&
+          t.getMessage.contains("18 of its 23"))(e), e)
+      }
+    }
   }
 
   test("truncated page: a read throws rather than returning a short count") {
@@ -359,10 +457,11 @@ class EsScrollSourceSpec extends SparkSpec {
       // never touches the scroll API
       assert(server.requests.asScala.forall(r => !r._2.contains("scroll")),
         "pit mode must not open or page a scroll context")
-      // 23 docs at size 5: 5 pages + empty terminator, all via /_search;
-      // every page after the first carries the previous page's cursor
+      // 23 docs at size 5: 5 pages, all via /_search, and no empty
+      // terminator after the exact total; every page after the first
+      // carries the previous page's cursor
       val pages = pitSearches(server)
-      assert(pages.size == 6, s"expected 6 PIT page fetches, got ${pages.size}")
+      assert(pages.size == 5, s"expected 5 PIT page fetches, got ${pages.size}")
       assert(!pages.head._3.contains("search_after"), pages.head._3)
       assert(pages.tail.forall(_._3.contains("search_after")),
         "every follow-up page must be keyed by search_after")
@@ -417,17 +516,17 @@ class EsScrollSourceSpec extends SparkSpec {
       val ids = df.select($"id").as[Long].collect().sorted.toSeq
       assert(ids == (0L until 23L), "flap must lose or duplicate nothing")
       val pages = pitSearches(server)
-      // 6 clean pages + the one flapped attempt
-      assert(pages.size == 7, s"expected 6 pages + 1 flap, got ${pages.size}")
+      // 5 clean pages + the one flapped attempt
+      assert(pages.size == 6, s"expected 5 pages + 1 flap, got ${pages.size}")
       // the retry re-sends the failed request verbatim: same search_after,
       // so the walk resumes from the last sort key instead of restarting
       // (the structural advantage over a server-side scroll context)
       assert(pages(2)._3 == pages(3)._3,
         s"retry must resume from the same cursor:\n${pages(2)._3}\n${pages(3)._3}")
-      // each cursor was advanced exactly once: 5 distinct search_after
-      // values across all requests (pages 2..6), none repeated twice+
+      // each cursor was advanced exactly once: 4 distinct search_after
+      // values across all requests (pages 2..5), none repeated twice+
       val cursors = pages.map(_._3).filter(_.contains("search_after"))
-      assert(cursors.distinct.size == 5, s"got cursors: $cursors")
+      assert(cursors.distinct.size == 4, s"got cursors: $cursors")
     }
   }
 

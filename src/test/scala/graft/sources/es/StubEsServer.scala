@@ -21,6 +21,15 @@ import scala.jdk.CollectionConverters._
   *  - `failNext(n)`: next n requests answer 503 (cluster flap)
   *  - `truncateNext(n)`: next n search responses answer 200 with the
   *    body cut mid-hit (mid-`hits` when the page has no hit)
+  *  - page continuations (`_search/scroll`, and the index-less PIT
+  *    `_search`): `delayNext(n, ms)` stalls the next n answers `ms` after
+  *    the cursor advanced (a response slower than the client's timeout);
+  *    `dropNext(n)` swallows one page in each of the next n (the cursor
+  *    skips it, the walk comes up short); `expireNext(n)` answers the
+  *    next n `_search/scroll` calls 404 as an expired context does
+  *  - `ignoreTrackTotalHits()`: every total above `totalHitsCap` reports
+  *    the cap as a `gte` bound, scroll searches included (a server that
+  *    never counts exactly)
   *  - sliced scrolls partition documents by `index % max == id`
   *  - `_source` include lists are honored (projection reaches the wire)
   *  - `addDocs` appends documents live (the tail-source suite's ingest)
@@ -70,6 +79,31 @@ final class StubEsServer(
   private val truncateBudget = new AtomicInteger(0)
   def truncateNext(n: Int): Unit = truncateBudget.set(n)
 
+  private val delayBudget = new AtomicInteger(0)
+  @volatile private var delayMs = 0L
+  def delayNext(n: Int, ms: Long): Unit = { delayMs = ms; delayBudget.set(n) }
+
+  private val dropBudget = new AtomicInteger(0)
+  def dropNext(n: Int): Unit = dropBudget.set(n)
+
+  private val expireBudget = new AtomicInteger(0)
+  def expireNext(n: Int): Unit = expireBudget.set(n)
+
+  @volatile private var ignoreTrackTotal = false
+  def ignoreTrackTotalHits(): Unit = ignoreTrackTotal = true
+
+  /** Spends one unit of a fault budget; false once it is used up. */
+  private def spend(budget: AtomicInteger): Boolean =
+    budget.getAndUpdate(n => math.max(0, n - 1)) > 0
+
+  private def stall(): Unit = if (spend(delayBudget)) Thread.sleep(delayMs)
+
+  /** `hits.total` as (value, relation): past `totalHitsCap` only the cap is
+    * reported, as a `gte` bound, unless the request tracks totals. */
+  private def reportedTotal(n: Long, tracked: Boolean): (Long, String) =
+    if ((!tracked || ignoreTrackTotal) && n > totalHitsCap) (totalHitsCap.toLong, "gte")
+    else (n, "eq")
+
   /** A search response cut halfway into its last hit's `_source`, or
     * halfway through the body when no hit carries one. */
   private def truncated(body: String): String = {
@@ -102,7 +136,7 @@ final class StubEsServer(
     val uri = ex.getRequestURI.toString
     requests.add((method, uri, body))
     try {
-      if (failBudget.getAndUpdate(n => math.max(0, n - 1)) > 0)
+      if (spend(failBudget))
         respond(ex, 503, """{"error":"stub flap"}""")
       else route(ex, method, ex.getRequestURI.getPath, uri, body)
     } catch {
@@ -154,16 +188,24 @@ final class StubEsServer(
           respond(ex, 400, """{"error":"index-less search requires a pit"}""")
         else Option(pits.get(pid.asText())) match {
           case None => respond(ex, 404, s"""{"error":"no pit ${pid.asText()}"}""")
-          case Some(snapshot) => respond(ex, 200, pitSearch(req, pid.asText(), snapshot))
+          case Some(snapshot) =>
+            val page = pitSearch(req, pid.asText(), snapshot, skipPage = spend(dropBudget))
+            stall()
+            respond(ex, 200, page)
         }
       case ("POST", "_search" :: "scroll" :: Nil) =>
         val id = mapper.readTree(body).get("scroll_id").asText()
+        if (spend(expireBudget)) sessions.remove(id)
         val session = sessions.get(id)
-        if (session == null) respond(ex, 404, s"""{"error":"no scroll $id"}""")
+        if (session == null) respond(ex, 404,
+          s"""{"error":{"type":"search_context_missing_exception",""" +
+            s""""reason":"No search context found for id [$id]"},"status":404}""")
         else {
+          if (spend(dropBudget)) session.docs = session.docs.drop(session.size)
           val (pageDocs, rest) = session.docs.splitAt(session.size)
           session.docs = rest
-          respond(ex, 200, pageJson(Some(id), -1, pageDocs))
+          stall()
+          respond(ex, 200, pageJson(Some(id), None, pageDocs))
         }
       case ("POST", idx :: "_search" :: Nil) =>
         val req = mapper.readTree(if (body.isEmpty) "{}" else body)
@@ -238,7 +280,9 @@ final class StubEsServer(
             sessions.put(id, Session(rest, size))
             Some(id)
           } else None
-        respond(ex, 200, pageJson(scrollId, projected.size.toLong, pageDocs))
+        // scroll searches always count exactly on ES7+
+        respond(ex, 200,
+          pageJson(scrollId, Some(reportedTotal(projected.size.toLong, tracked = true)), pageDocs))
         }
       case ("DELETE", "_search" :: "scroll" :: Nil) =>
         mapper.readTree(body).get("scroll_id").elements().asScala.foreach { id =>
@@ -272,7 +316,8 @@ final class StubEsServer(
     * take what follows), `_source` projection, and size; every hit carries
     * its `sort` array like real ES. */
   private def pitSearch(req: com.fasterxml.jackson.databind.JsonNode,
-                        pitId: String, snapshot: List[ObjectNode]): String = {
+                        pitId: String, snapshot: List[ObjectNode],
+                        skipPage: Boolean): String = {
     val size = Option(req.get("size")).map(_.asInt).getOrElse(10)
     val keep = inRange(req)
     val positioned = snapshot.zipWithIndex.filter { case (d, _) => keep(d) }
@@ -322,7 +367,7 @@ final class StubEsServer(
         keyed.drop(idx + 1)
       case None => keyed
     }
-    val pageHits = afterCut.take(size)
+    val pageHits = afterCut.drop(if (skipPage) size else 0).take(size)
     val projected: List[(ObjectNode, com.fasterxml.jackson.databind.node.ArrayNode)] =
       Option(req.get("_source")) match {
         case Some(src) if src.isArray =>
@@ -341,12 +386,9 @@ final class StubEsServer(
     val t = hits.putObject("total")
     // real-ES behavior: without track_total_hits, totals stop counting at
     // the cap and report a `gte` lower bound instead of the exact count
-    val trackTotal = Option(req.get("track_total_hits")).exists(_.asBoolean())
-    if (!trackTotal && ordered.size > totalHitsCap) {
-      t.put("value", totalHitsCap); t.put("relation", "gte")
-    } else {
-      t.put("value", ordered.size); t.put("relation", "eq")
-    }
+    val (value, relation) = reportedTotal(ordered.size.toLong,
+      tracked = Option(req.get("track_total_hits")).exists(_.asBoolean()))
+    t.put("value", value); t.put("relation", relation)
     val arr = hits.putArray("hits")
     projected.foreach { case (d, sv) =>
       val h = arr.addObject()
@@ -356,14 +398,14 @@ final class StubEsServer(
     mapper.writeValueAsString(root)
   }
 
-  private def pageJson(scrollId: Option[String], total: Long,
+  private def pageJson(scrollId: Option[String], total: Option[(Long, String)],
                        docs: Seq[ObjectNode]): String = {
     val root = mapper.createObjectNode()
     scrollId.foreach(root.put("_scroll_id", _))
     val hits = root.putObject("hits")
-    if (total >= 0) {
-      if (es6Totals) hits.put("total", total)
-      else { val t = hits.putObject("total"); t.put("value", total); t.put("relation", "eq") }
+    total.foreach { case (value, relation) =>
+      if (es6Totals) hits.put("total", value)
+      else { val t = hits.putObject("total"); t.put("value", value); t.put("relation", relation) }
     }
     val arr = hits.putArray("hits")
     docs.foreach { d =>
@@ -377,7 +419,7 @@ final class StubEsServer(
     val search = status == 200 && ex.getRequestMethod == "POST" &&
       ex.getRequestURI.getPath.contains("_search")
     val sent =
-      if (search && truncateBudget.getAndUpdate(n => math.max(0, n - 1)) > 0) truncated(body)
+      if (search && spend(truncateBudget)) truncated(body)
       else body
     val bytes = sent.getBytes(UTF_8)
     ex.getResponseHeaders.add("Content-Type", "application/json")
