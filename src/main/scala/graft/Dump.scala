@@ -98,6 +98,9 @@ object Dump {
       sort = flags.get("sort").filterNot(_ => esMode)
         .map(_.split(",").toSeq).getOrElse(Nil),
       flatten = flags.contains("flatten"),
+      maxPartitionBytes =
+        if (flags.contains("no-partition")) None
+        else flags.get("max-partition-mb").map(_.toLong * 1024 * 1024),
       sink = Sink.Config(
         format = output match {
           case "ndjson"            => "json"
@@ -108,9 +111,6 @@ object Dump {
         maxRecordsPerFile =
           if (flags.contains("no-partition")) Long.MaxValue
           else flags.get("max-partition-rows").map(_.toLong).getOrElse(1000000L),
-        maxPartitionBytes =
-          if (flags.contains("no-partition")) None
-          else flags.get("max-partition-mb").map(_.toLong * 1024 * 1024),
         partitionBy = flags.get("partition-by").map(_.split(",").toSeq).getOrElse(Nil)))
 
     // reference log-level flags (:403-410): --debug wins over --quiet

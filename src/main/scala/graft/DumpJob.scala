@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.StructType
 import graft.operators.{Coerce, Flatten}
@@ -11,6 +11,11 @@ import graft.sinks.Sink
   * optionally coerce to a fixed schema (T1) and flatten (T3), write with
   * rotation/format/compression (K1-K4) — with per-table error isolation
   * (reference dump-es-parquet:87-95: one bad table must not abort the run).
+  *
+  * One site each: [[transform]] is the only code that filters, projects,
+  * coerces and flattens (batch, stdout and `StreamDump` alike); [[run]]
+  * reads the T6 counters and resolves the byte cap; `Sink.write`
+  * serializes and writes.
   */
 object DumpJob {
 
@@ -23,6 +28,8 @@ object DumpJob {
       sort: Seq[String] = Nil,           // P3, reference --sort field:dir
       schema: Option[StructType] = None, // None = schema-on-read passthrough
       flatten: Boolean = false,          // reference --flatten
+      maxPartitionBytes: Option[Long] = None, // reference --max-partition-mb,
+                                         // a per-table row cap (see run)
       sink: Sink.Config = Sink.Config()) // format "text": K3 raw JSON lines
 
   /** P2 — expand field globs against actual columns, preserving table
@@ -58,8 +65,12 @@ object DumpJob {
     * them into the parquet reader (PushedFilters / ReadSchema); a live ES
     * DSv2 source would translate them to query-string and _source params.
     * Sort (P3) is applied at write time in [[run]], not here — a global
-    * orderBy is illegal in a streaming plan (StreamDump reuses this). */
-  def transform(df: DataFrame, config: Config): DataFrame = {
+    * orderBy is illegal in a streaming plan (StreamDump reuses this).
+    *
+    * `counters` names the T6 counters (`Coerce.counted`), returned as an
+    * Observation in batch; without it the coercion is uncounted. */
+  def transform(df: DataFrame, config: Config,
+                counters: Option[String] = None): (DataFrame, Option[Observation]) = {
     val filtered = config.query.fold(df)(q => df.filter(expr(q)))
     val projected =
       if (config.fields.isEmpty) filtered
@@ -67,11 +78,12 @@ object DumpJob {
         val keep = expandFields(filtered.columns.toSeq, config.fields)
         filtered.select(keep.map(c => col(s"`$c`")): _*)
       }
-    val coerced = config.schema match {
-      case Some(s) => Coerce.withMetrics(s)(projected)
-      case None    => projected
+    val (coerced, obs) = (config.schema, counters) match {
+      case (Some(s), Some(name)) => Coerce.counted(s, name)(projected)
+      case (Some(s), None)       => (Coerce(s)(projected), None)
+      case (None, _)             => (projected, None)
     }
-    if (config.flatten) Flatten(coerced) else coerced
+    (if (config.flatten) Flatten(coerced) else coerced, obs)
   }
 
   /** Entry point B — the reference's stdout mode (dump-es-parquet:250-253):
@@ -90,7 +102,7 @@ object DumpJob {
       try {
         // no schema coercion in passthrough mode (reference :58,215), but
         // --flatten still applies — it reshapes, it doesn't coerce
-        val raw = transform(catalog.load(spark, table),
+        val (raw, _) = transform(catalog.load(spark, table),
           config.copy(schema = None))
         val df = if (config.sort.isEmpty) raw
                  else raw.orderBy(sortCols(config.sort): _*)
@@ -119,37 +131,21 @@ object DumpJob {
           outDir: String, config: Config): Seq[Result] =
     catalog.listTables(config.pattern).map { table =>
       try {
-        val raw = transform(catalog.load(spark, table),
-          config.copy(schema = None, flatten = false)) // P1/P2 only here
-        val (coerced, obs) = config.schema match {
-          case Some(s) =>
-            val o = org.apache.spark.sql.Observation(s"graft_coerce_$table")
-            val (df, attached) = Coerce.withObservation(s, o)(raw)
-            (df, if (attached) Some(o) else None)
-          case None => (raw, None)
-        }
-        val flat = if (config.flatten) Flatten(coerced) else coerced
+        val src = catalog.load(spark, table)
+        val (flat, obs) = transform(src, config, Some(s"graft_coerce_$table"))
         // P3: output order is part of the dump contract (reference sorts
         // source-side so scroll order is deterministic)
         val df = if (config.sort.isEmpty) flat else flat.orderBy(sortCols(config.sort): _*)
-        // Resolve the byte-size cap on an UNOBSERVED twin of the written
+        // Resolve the byte-size cap on an UNCOUNTED twin of the written
         // frame: the size probe is an action, and an Observation completes
-        // at the FIRST action on its plan — probing the observed frame
+        // at the FIRST action on its plan — probing the counted frame
         // would silently turn the per-table warning counts into counts
         // over the 2000-row sample instead of the real write.
-        val sinkCfg = config.sink.maxPartitionBytes match {
-          case Some(b) =>
-            val plain = config.schema.fold(raw)(s => Coerce(s)(raw))
-            val plainFlat = if (config.flatten) Flatten(plain) else plain
-            val cap = math.min(config.sink.maxRecordsPerFile,
-              Sink.rowsForTargetBytes(plainFlat, b, config.sink))
-            config.sink.copy(maxPartitionBytes = None, maxRecordsPerFile = cap)
-          case None => config.sink
+        val sink = config.maxPartitionBytes.fold(config.sink) { b =>
+          val cap = Sink.rowsForTargetBytes(transform(src, config)._1, b, config.sink)
+          config.sink.copy(maxRecordsPerFile = math.min(config.sink.maxRecordsPerFile, cap))
         }
-        val files =
-          if (config.sink.format == "text")
-            Sink.writeRawJson(df, s"$outDir/$table", table, sinkCfg)
-          else Sink.write(df, s"$outDir/$table", table, sinkCfg)
+        val files = Sink.write(df, s"$outDir/$table", table, sink)
         // the write was the observed action, so get() returns immediately
         val warnings = obs.map(_.get.collect {
           case (k, v: Long) if v > 0 => k -> v

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Lenient
@@ -20,9 +20,10 @@ import graft.functions.Lenient
   *
   * Everything is a pure Column expression — the whole stage collapses into
   * one codegen'd projection, so at 100 TB it costs a map, never a shuffle.
-  * Observability (T6) is via `withMetrics`: `df.observe` metrics counting
-  * rows nulled per field — Spark's accumulator-backed, dedup-by-definition
-  * equivalent of the reference's warning counters (:85,304-305,352-353).
+  * Observability (T6) is via `counted`, the one counting entry point:
+  * `observe` metrics counting rows nulled per field — Spark's
+  * accumulator-backed, dedup-by-definition equivalent of the reference's
+  * warning counters (:85,304-305,352-353).
   */
 object Coerce {
 
@@ -70,60 +71,50 @@ object Coerce {
   }
 
   /** Project `df` onto `target`: drop unknown columns, null-fill missing
-    * ones, lenient-coerce the rest. */
-  def apply(target: StructType)(df: DataFrame): DataFrame = {
+    * ones, lenient-coerce the rest. The one projection body; [[counted]]
+    * wraps the same columns with the T6 counters. */
+  def apply(target: StructType)(df: DataFrame): DataFrame =
+    df.select(columns(target, df, ""): _*)
+
+  /** The coerced target columns, each named `prefix + field`. */
+  private def columns(target: StructType, df: DataFrame, prefix: String): Seq[Column] = {
     val srcFields = df.schema.fields.map(f => f.name -> f).toMap
-    val cols = target.fields.map { tf =>
-      srcFields.get(tf.name) match {
-        case Some(sf) => coerceColumn(col(s"`${tf.name}`"), sf.dataType, tf.dataType).as(tf.name)
-        case None     => lit(null).cast(tf.dataType).as(tf.name)
-      }
-    }
-    df.select(cols.toSeq: _*)
-  }
-
-  /** T6 — coercion observability: wrap the coerced frame with an `observe`
-    * node counting, per target field, rows where the input was present but
-    * the coerced value is null (the reference's per-message warning
-    * counters, flushed once per table). Read back via
-    * `QueryExecution.observedMetrics` or a QueryExecutionListener.
-    */
-  def withMetrics(target: StructType, metricName: String = "graft_coerce")(df: DataFrame): DataFrame =
-    build(target, df, w => cs => w.observe(metricName, cs.head, cs.tail: _*))
-
-  /** Like [[withMetrics]] but bound to an [[org.apache.spark.sql.Observation]]:
-    * the caller can block on `obs.get` after its action and read the
-    * counters directly (how DumpJob flushes per-table warnings). Returns
-    * the coerced frame and whether the observation was attached (no
-    * overlapping fields -> nothing to count -> `obs.get` would hang). */
-  def withObservation(target: StructType, obs: org.apache.spark.sql.Observation)(
-      df: DataFrame): (DataFrame, Boolean) = {
-    var attached = false
-    val out = build(target, df, w => cs => { attached = true; w.observe(obs, cs.head, cs.tail: _*) })
-    (out, attached)
-  }
-
-  private def build(target: StructType, df: DataFrame,
-                    attach: DataFrame => Seq[Column] => DataFrame): DataFrame = {
-    val srcFields = df.schema.fields.map(f => f.name -> f).toMap
-    // keep source and coerced columns side by side so the metrics can
-    // compare "input present, output lost" per field, then project down
-    val coercedCols = target.fields.toSeq.map { tf =>
+    target.fields.toSeq.map { tf =>
       val c = srcFields.get(tf.name) match {
         case Some(sf) => coerceColumn(col(s"`${tf.name}`"), sf.dataType, tf.dataType)
         case None     => lit(null).cast(tf.dataType)
       }
-      c.as(s"__coerced_${tf.name}")
+      c.as(prefix + tf.name)
     }
-    val wide = df.select(df.columns.toSeq.map(c => col(s"`$c`")) ++ coercedCols: _*)
+  }
+
+  /** T6 — [[apply]] plus, per target field the source holds, a
+    * `null_<field>` count of rows whose present input coerced to null
+    * (the reference's per-message warning counters, flushed once per
+    * table). In batch they attach through the returned [[Observation]]
+    * `name`, read by `obs.get` after the first action (DumpJob's
+    * warnings); Spark refuses an Observation on a streaming Dataset, so
+    * there a named `observe` feeds `StreamingQueryProgress.observedMetrics`
+    * and None is returned — as when no field is shared, where `obs.get`
+    * would never return. */
+  def counted(target: StructType, name: String)(df: DataFrame): (DataFrame, Option[Observation]) = {
+    val present = df.columns.toSet
     val counters = target.fields.toSeq.collect {
-      case tf if srcFields.contains(tf.name) =>
+      case tf if present(tf.name) =>
         sum(when(col(s"`${tf.name}`").isNotNull &&
                  col(s"`__coerced_${tf.name}`").isNull, 1L).otherwise(0L))
           .as(s"null_${tf.name}")
     }
-    val observed = if (counters.isEmpty) wide else attach(wide)(counters)
-    observed.select(target.fields.toSeq.map(tf =>
-      col(s"`__coerced_${tf.name}`").as(tf.name)): _*)
+    if (counters.isEmpty) (apply(target)(df), None)
+    else {
+      // keep source and coerced columns side by side so the counters can
+      // compare "input present, output lost" per field, then project down
+      val wide = df.select(df.columns.toSeq.map(c => col(s"`$c`")) ++
+        columns(target, df, "__coerced_"): _*)
+      val obs = if (df.isStreaming) None else Some(Observation(name))
+      val observed = obs.fold(wide.observe(name, counters.head, counters.tail: _*))(
+        o => wide.observe(o, counters.head, counters.tail: _*))
+      (observed.select(target.fieldNames.toSeq.map(n => col(s"`__coerced_$n`").as(n)): _*), obs)
+    }
   }
 }

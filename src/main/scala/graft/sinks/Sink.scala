@@ -9,12 +9,16 @@ import org.apache.spark.sql.DataFrame
   *     `maxRecordsPerFile` makes every task writer rotate files at the row
   *     cap; Spark streams rows to files, so peak memory is a write buffer,
   *     not a partition — strictly better than the reference's
-  *     accumulate-then-flush at 100 TB.
+  *     accumulate-then-flush at 100 TB. A byte target becomes that row cap
+  *     through [[rowsForTargetBytes]], called once per table by
+  *     `DumpJob.run` (the only place a byte cap is resolved).
   *   - K2 multi-format (parquet/ndjson/csv, reference :312-323) plus `text`
   *     for the K3 raw passthrough.
-  *   - K3 raw JSON passthrough (reference :244-254,273-281): schema-free
-  *     `toJSON` -> text sink; survives inconsistent types by never building
-  *     a typed frame (README.md:56-58).
+  *   - K3 raw JSON passthrough (reference :244-254,273-281): [[serialize]]
+  *     turns a `text`-format frame into one `toJSON` line per row, schema
+  *     free; survives inconsistent types by never building a typed frame
+  *     (README.md:56-58). `write` and `StreamDump` both serialize through
+  *     it, so the byte probe measures the lines the sink writes.
   *   - K4 compression codecs gzip/zstd/none (reference :325-336) via writer
   *     options; parquet compression is pinned zstd at the session level.
   *
@@ -30,9 +34,7 @@ object Sink {
       format: String = "parquet",        // parquet | json | csv | text
       compression: Option[String] = None, // gzip | zstd | none
       maxRecordsPerFile: Long = 1000000,  // reference --max-partition-rows
-      maxPartitionBytes: Option[Long] = None, // reference --max-partition-mb
-      partitionBy: Seq[String] = Nil,     // hive-style layout (reference TODO :378)
-      header: Boolean = true)             // csv only
+      partitionBy: Seq[String] = Nil)     // hive-style layout (reference TODO :378)
 
   private def extension(c: Config): String = {
     val base = c.format match {
@@ -62,8 +64,7 @@ object Sink {
     // scans the source twice (two extra scrolls against a live cluster)
     val sample = df.limit(sampleRows).cache()
     try {
-      val cfg = config.copy(maxPartitionBytes = None, maxRecordsPerFile = Long.MaxValue,
-        partitionBy = Nil)
+      val cfg = config.copy(maxRecordsPerFile = Long.MaxValue, partitionBy = Nil)
       val files = write(sample.coalesce(1), tmp, "probe", cfg)
       val bytes = files.map(f => {
         val p = new Path(f); p.getFileSystem(hconf).getFileStatus(p).getLen
@@ -92,22 +93,12 @@ object Sink {
     * (dump-es-parquet:236-238): an empty file still carries the schema,
     * which downstream union_by_name reads need; no file loses it. */
   def write(df: DataFrame, dir: String, table: String, config: Config = Config()): Seq[String] = {
-    val rowCap = config.maxPartitionBytes match {
-      case Some(b) => math.min(config.maxRecordsPerFile, rowsForTargetBytes(df, b, config))
-      case None    => config.maxRecordsPerFile
-    }
-    val w0 = df.write.mode("overwrite")
-      .option("maxRecordsPerFile", rowCap)
-    val w1 = config.compression match {
-      case Some(c) => w0.option("compression", c)
-      case None    => w0
-    }
-    val w2 = if (config.format == "csv") w1.option("header", config.header) else w1
+    val w = serialize(df, config).write.mode("overwrite").options(options(config))
     if (config.partitionBy.nonEmpty) {
-      w2.partitionBy(config.partitionBy: _*).format(config.format).save(dir)
+      w.partitionBy(config.partitionBy: _*).format(config.format).save(dir)
       listDataFiles(df, dir)
     } else {
-      w2.format(config.format).save(dir)
+      w.format(config.format).save(dir)
       rename(df, dir, table, config)
     }
   }
@@ -126,13 +117,17 @@ object Sink {
     out.result().sorted
   }
 
-  /** K3 — raw JSON passthrough: no schema, no coercion; each row serialized
-    * as one JSON line (jsonl). */
-  def writeRawJson(df: DataFrame, dir: String, table: String,
-                   config: Config = Config(format = "text")): Seq[String] = {
-    val lines = df.toJSON.toDF("value")
-    write(lines, dir, table, config.copy(format = "text"))
-  }
+  /** Writer options (K1 row cap, K4 codec, csv header), the same for a
+    * batch write and `StreamDump`'s file stream. */
+  private[graft] def options(c: Config): Map[String, String] =
+    Map("maxRecordsPerFile" -> c.maxRecordsPerFile.toString) ++
+      c.compression.map("compression" -> _) ++
+      (if (c.format == "csv") Some("header" -> "true") else None)
+
+  /** K3 — the frame the writer receives: for `text`, each row serialized
+    * as one JSON line (jsonl) with no schema or coercion; else `df`. */
+  private[graft] def serialize(df: DataFrame, config: Config): DataFrame =
+    if (config.format == "text") df.toJSON.toDF("value") else df
 
   /** Rename committer output `part-*` to `{table}-{NNNN}.{ext}`; single
     * file drops the number (reference :312-316). */

@@ -1,14 +1,14 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 import graft.Tables
 
-/** The pluggable source seam (SURVEY.md §7.0): the three catalog-facing
+/** The pluggable source seam (SURVEY.md §7.0): the catalog-facing
   * operations the reference performs against Elasticsearch — resolve an
-  * index pattern (S1, `indices.get_settings`), fetch a table's schema
-  * (S2, `indices.get_mapping`), and scan it (S3, scroll) — abstracted so
-  * a live DSv2 ES connector can drop in without touching any operator.
+  * index pattern (S1, `indices.get_settings`) and scan a table (S3,
+  * scroll) — abstracted so a live DSv2 ES connector can drop in without
+  * touching any operator. The table's schema (S2, `indices.get_mapping`)
+  * is the loaded frame's: a DSv2 source resolves it in `inferSchema`.
   *
   * Implementations must wrap remote calls in [[Retry.withBackoff]] (S4);
   * the parquet fixture catalog has no remote calls to wrap.
@@ -16,8 +16,6 @@ import graft.Tables
 trait SourceCatalog {
   /** S1: expand a glob pattern to concrete table names. */
   def listTables(pattern: String): Seq[String]
-  /** S2: the fixed, upstream-authoritative schema of a table. */
-  def tableSchema(spark: SparkSession, name: String): StructType
   /** S3: scan a table. */
   def load(spark: SparkSession, name: String): DataFrame
 }
@@ -29,8 +27,6 @@ trait SourceCatalog {
   */
 final case class ParquetDirCatalog(dir: String) extends SourceCatalog {
   def listTables(pattern: String): Seq[String] = Tables.resolve(pattern)
-  def tableSchema(spark: SparkSession, name: String): StructType =
-    load(spark, name).schema
   def load(spark: SparkSession, name: String): DataFrame =
     Tables.load(spark, dir, name)
 }

@@ -1,13 +1,13 @@
 package graft.sources.es
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 import graft.sources.SourceCatalog
 
 /** Live-cluster implementation of the [[graft.sources.SourceCatalog]]
   * seam: index-pattern resolution via `indices.get_settings` (S1,
-  * reference dump-es-parquet:342-350), schemas via `indices.get_mapping`
-  * (S2, :185-204), scans via the `graft-es` DSv2 scroll source (S3).
+  * reference dump-es-parquet:342-350) and scans via the `graft-es` DSv2
+  * scroll source (S3), whose schema is the index mapping
+  * (S2, `indices.get_mapping`, :185-204, `EsScrollSource.fetchSchema`).
   * Every catalog call is retried with the reference's transient-error
   * semantics (S4).
   *
@@ -18,9 +18,6 @@ final case class EsCatalog(
     http: EsHttpConfig,
     readOptions: Map[String, String] = Map.empty) extends SourceCatalog {
 
-  private def conf(index: String): EsScanConfig =
-    EsScanConfig.fromOptions(baseOptions + ("index" -> index))
-
   private def baseOptions: Map[String, String] = readOptions ++ Map(
     "es" -> http.baseUrl,
     "timeout" -> http.timeoutSec.toString,
@@ -30,16 +27,12 @@ final case class EsCatalog(
 
   /** S1: expand an index pattern to concrete index names. */
   override def listTables(pattern: String): Seq[String] = {
-    val c = conf(pattern)
+    val c = EsScanConfig.fromOptions(baseOptions + ("index" -> pattern))
     val transport = c.transportFactory.open()
     try {
       EsApi.parseIndexNames(c.retried(pattern)(transport.get(s"/$pattern/_settings")))
     } finally transport.close()
   }
-
-  /** S2: the mapping-derived schema the scan will coerce into. */
-  override def tableSchema(spark: SparkSession, name: String): StructType =
-    EsScrollSource.fetchSchema(conf(name))
 
   /** S3: a DataFrame over the index via the scroll source. */
   override def load(spark: SparkSession, name: String): DataFrame =

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -151,9 +151,9 @@ private[jsonl] class JsonlScanBuilder(full: StructType, paths: Seq[String])
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
 
   /** P3's count analog for files (the ES source pushes `count(*)` as a
-    * size-0 search): a bare `df.count()` never parses a document into a
-    * row — each partition reader counts its file's emittable lines
-    * (same blank/corrupt skip semantics as the row path) and returns
+    * size-0 search): a bare `df.count()` never coerces a field — each
+    * partition reader counts the rows its file's row reader emits under
+    * an empty schema (the row path's own blank/corrupt skip) and returns
     * ONE partial-count row; Spark sums the partials. PARTIAL pushdown
     * on purpose: per-file counts keep the merge distributed and the
     * contract simple. Refused whenever in-reader filters or a pushed
@@ -256,50 +256,27 @@ private[jsonl] class JsonlReaderFactory(required: StructType,
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[JsonlPartition]
-    if (countStar) new JsonlCountReader(p.file, p.conf.value)
-    else new JsonlPartitionReader(required, p.file, pushed, p.conf.value, limit)
-  }
-}
-
-/** Pushed-count(*) reader: one partial-count row per file, with the row
-  * path's exact emit semantics (blank and corrupt lines skipped, any
-  * parse-success counts) but no per-document coercion or row
-  * materialization. */
-private[jsonl] class JsonlCountReader(file: String, hconf: Configuration)
-    extends PartitionReader[InternalRow] {
-  private val mapper = new ObjectMapper()
-  private var done = false
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (done) return false
-    val in = graft.sources.Retry.withBackoff(attempts = 3, backoffMs = 100) {
-      val path = new Path(file)
-      val fs = path.getFileSystem(hconf)
-      new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(path), UTF_8))
-    }
-    var n = 0L
-    var corrupt = 0L
-    try {
-      var line = in.readLine()
-      while (line != null) {
-        if (!line.isBlank) {
-          try { if (!mapper.readTree(line).isMissingNode) n += 1 else corrupt += 1 }
-          catch { case _: com.fasterxml.jackson.core.JacksonException => corrupt += 1 }
-        }
-        line = in.readLine()
+    if (!countStar) new JsonlPartitionReader(required, p.file, pushed, p.conf.value, limit)
+    else {
+      // pushed count(*): drain the row reader with an empty schema — the
+      // row path's exact emit semantics (blank and corrupt lines skipped),
+      // every field skipped unread — into ONE partial-count row per file
+      val rows = new JsonlPartitionReader(new StructType(), p.file, Array.empty, p.conf.value)
+      new PartitionReader[InternalRow] {
+        private var n = -1L // -1 until the file is drained
+        override def next(): Boolean =
+          if (n >= 0) false
+          else {
+            n = 0
+            while (rows.next()) n += 1
+            true
+          }
+        override def get(): InternalRow =
+          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](n))
+        override def close(): Unit = rows.close()
       }
-    } finally in.close()
-    if (corrupt > 0)
-      JsonlSource.log.warn(s"$file: skipped $corrupt corrupt JSON line(s)")
-    row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](n))
-    done = true
-    true
+    }
   }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = ()
 }
 
 private[jsonl] class JsonlPartitionReader(required: StructType, file: String,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.DumpJob
+import graft.sinks.Sink
 
 /** Continuous-ingest variant of the dump pipeline (Structured Streaming).
   *
@@ -14,7 +15,10 @@ import graft.DumpJob
   * same transform chain (coerce -> flatten, `DumpJob.transform`) as a
   * file stream: new files landing under `srcDir` are picked up
   * incrementally, transformed, and appended to `outDir` with exactly-once
-  * bookkeeping via the checkpoint.
+  * bookkeeping via the checkpoint. Coercion counters are the named
+  * `observe` "graft_coerce" in `StreamingQueryProgress.observedMetrics`;
+  * output is serialized and optioned by `Sink`, as in a batch dump; the
+  * batch-only byte cap (`DumpJob.Config.maxPartitionBytes`) is ignored.
   *
   * Trigger.AvailableNow drains everything currently present and stops —
   * the scroll-until-empty-page semantics of the reference (:259-266) —
@@ -38,17 +42,13 @@ object StreamDump {
     val src = config.maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
       .parquet(srcDir)
-    val transformed = DumpJob.transform(src, config.dump)
-    val format = config.dump.sink.format
-    val out = if (format == "text") transformed.toJSON.toDF("value") else transformed
-    val writer = out.writeStream
-      .format(format)
+    val (transformed, _) = DumpJob.transform(src, config.dump, Some("graft_coerce"))
+    Sink.serialize(transformed, config.dump.sink).writeStream
+      .format(config.dump.sink.format)
+      .options(Sink.options(config.dump.sink))
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
-      .option("maxRecordsPerFile", config.dump.sink.maxRecordsPerFile)
       .trigger(config.trigger)
-    config.dump.sink.compression
-      .fold(writer)(c => writer.option("compression", c))
       .start()
   }
 }

@@ -118,4 +118,21 @@ class DumpSpec extends SparkSpec {
     assert(results.map(_.table).sorted == Seq("nation", "region"))
     assert(results.forall(_.isInstanceOf[DumpJob.Written]))
   }
+
+  test("--output jsonl with --max-partition-mb rotates raw JSON lines") {
+    // the byte probe writes what the sink writes: serialized JSON lines,
+    // never the typed frame the text writer cannot take
+    val out = Files.createTempDirectory("dump_jsonl_mb").toString
+    val results = Dump.execute(spark, Array(
+      "lineitem", "--src", sf(), "--out", out,
+      "--output", "jsonl", "--max-partition-mb", "1", "--quiet"))
+    assert(results.forall(_.isInstanceOf[DumpJob.Written]), results)
+    val names = files(s"$out/lineitem")
+    assert(names.length > 1 && names.forall(_.endsWith(".jsonl")), names)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val lines = names.flatMap(n =>
+      Files.readAllLines(java.nio.file.Paths.get(s"$out/lineitem/$n")).asScala)
+    assert(lines.forall(l => mapper.readTree(l).isObject))
+    assert(lines.size == Tables.load(spark, sf(), "lineitem").count())
+  }
 }

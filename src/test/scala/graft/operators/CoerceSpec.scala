@@ -81,10 +81,10 @@ class CoerceSpec extends SparkSpec {
     }
   }
 
-  test("withMetrics counts rows lost per field (T6 warning counters)") {
+  test("counted counts rows lost per field (T6 warning counters)") {
     val df = Seq("1", "x", "y", "4").toDF("v")
     val target = StructType(Seq(StructField("v", LongType)))
-    val observed = Coerce.withMetrics(target, "t6_test")(df)
+    val (observed, obs) = Coerce.counted(target, "t6_test")(df)
     val seen = mutable.Map.empty[String, Long]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
@@ -97,6 +97,11 @@ class CoerceSpec extends SparkSpec {
       val deadline = System.currentTimeMillis() + 10000
       while (seen.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
       assert(seen.get("null_v").contains(2L)) // "x" and "y" nulled
+      // the same counters, read through the returned Observation
+      assert(obs.map(_.get("null_v")).contains(2L))
     } finally spark.listenerManager.unregister(listener)
+    // no field in common: nothing to count, so no Observation to wait on
+    val other = StructType(Seq(StructField("w", LongType)))
+    assert(Coerce.counted(other, "t6_none")(df)._2.isEmpty)
   }
 }

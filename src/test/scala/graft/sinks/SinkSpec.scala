@@ -24,12 +24,20 @@ class SinkSpec extends SparkSpec {
     assert(names(dir) == Seq("t-0000.parquet", "t-0001.parquet", "t-0002.parquet", "t-0003.parquet"))
   }
 
+  /** A one-table catalog over `df`, for driving `DumpJob.run`. */
+  private def catalogOf(df: org.apache.spark.sql.DataFrame): graft.sources.SourceCatalog =
+    new graft.sources.SourceCatalog {
+      def listTables(pattern: String): Seq[String] = Seq("t")
+      def load(s: org.apache.spark.sql.SparkSession, name: String) = df
+    }
+
   test("K1: size-based rotation derives a row cap from measured bytes/row") {
-    val dir = tmp()
+    val out = tmp()
+    val dir = s"$out/t"
     val df = spark.range(20000)
       .selectExpr("id", "repeat(uuid(), 4) as pad").coalesce(1)
-    val files = Sink.write(df, dir, "t",
-      Sink.Config(maxPartitionBytes = Some(64 * 1024))) // 64 KB target
+    val Seq(DumpJob.Written(_, files, _)) = DumpJob.run(spark, catalogOf(df), out,
+      DumpJob.Config(maxPartitionBytes = Some(64 * 1024))) // 64 KB target
     assert(files.length > 1, "a 64KB cap over ~500KB of data must rotate")
     val hconf = spark.sparkContext.hadoopConfiguration
     val sizes = files.map(f => {
@@ -90,7 +98,7 @@ class SinkSpec extends SparkSpec {
   test("K3: raw JSON passthrough writes one JSON object per line, schema-free") {
     val dir = tmp()
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v").coalesce(1)
-    Sink.writeRawJson(df, dir, "t", Sink.Config(format = "text"))
+    Sink.write(df, dir, "t", Sink.Config(format = "text"))
     assert(names(dir) == Seq("t.jsonl"))
     val lines = spark.read.text(dir).as[String].collect().sorted
     assert(lines.toSeq == Seq("""{"k":1,"v":"a"}""", """{"k":2,"v":"b"}"""))
@@ -164,5 +172,20 @@ class SinkSpec extends SparkSpec {
     val Seq(w: DumpJob.Written) = results
     val n = spark.read.parquet(sf() + "/nation.parquet").count()
     assert(w.warnings == Map("null_n_name" -> n))
+  }
+
+  test("DumpJob: a byte-capped dump counts warnings over the whole table, not the probe's sample") {
+    import org.apache.spark.sql.types._
+    val out = tmp()
+    // the size probe writes a 2000-row sample of an UNCOUNTED twin, so
+    // the counters still see every one of lineitem's rows
+    val target = StructType(Seq(
+      StructField("l_orderkey", LongType), StructField("l_returnflag", LongType)))
+    val Seq(w: DumpJob.Written) = DumpJob.run(spark, sf(), out, DumpJob.Config(
+      pattern = "lineitem", schema = Some(target), maxPartitionBytes = Some(4 * 1024)))
+    val n = spark.read.parquet(sf() + "/lineitem.parquet").count()
+    assert(n > 2000 && w.files.length > 1, s"$n rows in ${w.files.length} file(s)")
+    assert(w.warnings == Map("null_l_returnflag" -> n))
+    assert(spark.read.parquet(s"$out/lineitem").count() == n)
   }
 }

@@ -45,12 +45,17 @@ class JsonlSourceSpec extends SparkSpec {
 
   test("count(*) pushdown: partial counts per file, corrupt/blank skip, filters refuse") {
     val dir = Files.createTempDirectory("jsonl_cnt").toString
-    // two files, with blank + corrupt lines the row path also skips
+    // two files, with blank + corrupt lines the row path also skips, and
+    // non-object documents the row path emits as all-null rows
     Files.writeString(java.nio.file.Paths.get(s"$dir/a.jsonl"),
       """{"k": 1}
         |
         |not json at all
         |{"k": 2}
+        |123
+        |null
+        |"s"
+        |[1]
         |""".stripMargin)
     Files.writeString(java.nio.file.Paths.get(s"$dir/b.jsonl"),
       """{"k": 3}
@@ -67,8 +72,9 @@ class JsonlSourceSpec extends SparkSpec {
     assert(scans.nonEmpty &&
       scans.head.scan.description().contains("PushedAggregation=[COUNT(*)]"),
       scans.map(_.scan.description()).mkString("\n"))
-    assert(counted.as[Long].head() == 5L, "pushed count == row-path count")
-    assert(df.count() == 5L)
+    assert(counted.as[Long].head() == 9L, "pushed count == row-path count")
+    assert(df.count() == 9L)
+    assert(df.collect().length == 9, "the row path emits the same rows")
 
     // a filter above the scan must refuse the push and stay exact
     val filtered = df.filter($"k" > 2).groupBy().count()

@@ -41,7 +41,7 @@ class RetrySpec extends AnyFunSuite {
     val spark = graft.SharedSpark.spark
     val cat = ParquetDirCatalog("/root/testdata/sf0.001")
     assert(cat.listTables("*ation*") == Seq("nation"))
-    assert(cat.tableSchema(spark, "region").fieldNames.contains("r_regionkey"))
+    assert(cat.load(spark, "region").schema.fieldNames.contains("r_regionkey"))
     assert(cat.load(spark, "region").count() == 5)
   }
 }

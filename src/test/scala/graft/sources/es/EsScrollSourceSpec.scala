@@ -193,7 +193,7 @@ class EsScrollSourceSpec extends SparkSpec {
         EsHttpConfig(baseUrl = server.url),
         readOptions = Map("size" -> "3", "retries" -> "2", "retry_backoff_ms" -> "1"))
       assert(cat.listTables("logs-*") == Seq("logs-2024.01", "logs-2024.02"))
-      assert(cat.tableSchema(spark, "logs-2024.01")("ts").dataType == TimestampType)
+      assert(cat.load(spark, "logs-2024.01").schema("ts").dataType == TimestampType)
       assert(cat.load(spark, "logs-2024.02").count() == 4)
     } finally server.close()
   }

@@ -41,6 +41,22 @@ class StreamDumpSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 130)
   }
 
+  test("named coercion counters reach StreamingQueryProgress.observedMetrics") {
+    val src = Files.createTempDirectory("sd_src3").toString
+    val out = Files.createTempDirectory("sd_out3").toString
+    val ckpt = Files.createTempDirectory("sd_ckpt3").toString
+    Seq("1", "x", "3", "y", "z").toDF("v").write.mode("overwrite").parquet(src)
+
+    val q = StreamDump.start(spark, src, out, ckpt, StreamDump.Config(
+      schema = spark.read.parquet(src).schema,
+      dump = DumpJob.Config(schema = Some(StructType(Seq(StructField("v", LongType)))))))
+    q.awaitTermination(60000)
+    val lost = q.recentProgress.toSeq.flatMap(p =>
+      Option(p.observedMetrics.get("graft_coerce")).map(_.getAs[Long]("null_v")))
+    assert(lost.sum == 3L, s"per-batch lost counts: $lost") // x, y, z
+    assert(spark.read.parquet(out).count() == 5)
+  }
+
   test("raw JSON passthrough mode streams schema-free lines (K3 shape)") {
     val src = Files.createTempDirectory("sd_src2").toString
     val out = Files.createTempDirectory("sd_out2").toString
