@@ -1,45 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // Same pins as Verify (ansi=false/UTC/AQE) so bench plans match the
+    // Same session as Verify (ansi=false/UTC/AQE) so bench plans match the
     // correctness-checked plans.
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JIT/codegen/class-loading for the operator families
-    // used below (agg, window, HOF/md5, parquet scan) should not be billed
-    // to whichever query happens to exercise them first.
-    try {
-      spark.range(1000000).selectExpr("sum(id) as s")
-        .write.format("noop").mode("overwrite").save()
-      spark.range(10000)
-        .selectExpr("id % 7 as k", "md5(cast(id as string)) as h",
-          "transform(sequence(0, 3), i -> i * id) as arr")
-        .selectExpr("k", "h", "aggregate(arr, 0L, (a, x) -> a + x) as s",
-          "row_number() over (partition by k order by h) as rn")
-        .where("rn <= 2")
-        .write.format("noop").mode("overwrite").save()
-      // First touch of a parquet file pays file-index/footer/codec init
-      // (~2s even for a 600 KB table) — warm every fixture table once so
-      // per-query times measure the operators, not cold IO setup.
-      Tables.names.foreach { t =>
-        try Tables.load(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => }
-      }
-    } catch { case _: Throwable => }
+    val spark = GraftSession.local()
+    GraftSession.warm(spark, sfDir)
     val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // noop sink forces full computation of every column (count() would
-      // let Catalyst prune projections and skip real work). Two runs,
-      // report the min: the first run pays one-time codegen/JIT for that
-      // query's plan, the second measures the steady state a real
-      // workload sees. A query that throws on EITHER run lands in
+      // Two runs, report the min: the first run pays one-time codegen/JIT
+      // for that query's plan, the second measures the steady state a
+      // real workload sees. A query that throws on EITHER run lands in
       // `failures`, never in `queries` — a flaky query's surviving run
       // is not a trustworthy measurement either.
       // Forced GC between queries (JMH-style hygiene): 88 earlier
@@ -49,33 +20,48 @@ object Bench {
       // steady state.
       System.gc()
       val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
+        try Some(noop(fn(spark, sfDir)))
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
         }
       }
       name -> (if (times.forall(_.isDefined)) Some(times.flatten.min) else None)
     }
-    val ok = runs.collect { case (n, Some(t)) => n -> t }
-    val failures = runs.collect { case (n, None) => n }
-    val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fs = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = ok.map(_._2).sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$fs,"sf":"$sfDir"}"""
-    println(line)
+    val out = line(runs, sfDir)
+    println(out)
     // sbt prefixes stdout with "[info] ", which breaks machine parsing of
     // the line above — also land it in a plain file the driver can read.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), out + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     spark.stop()
+  }
+
+  /** Wall seconds `f` takes. */
+  def seconds(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Seconds to build `df` and compute every column of it into the noop
+    * sink (count() would let Catalyst prune projections and skip real
+    * work). */
+  def noop(df: => DataFrame): Double =
+    seconds(df.write.format("noop").mode("overwrite").save())
+
+  /** The one-line JSON result: seconds per successful query (`None` marks
+    * a failed one), names sorted, failures listed apart, `total` the sum of
+    * the successful times. */
+  def line(runs: Seq[(String, Option[Double])], sfDir: String): String = {
+    val sorted = runs.sortBy(_._1)
+    val ok = sorted.collect { case (n, Some(t)) => n -> t }
+    val failures = sorted.collect { case (n, None) => n }
+    val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val fs = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = ok.map(_._2).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$fs,"sf":"$sfDir"}"""
   }
 }

@@ -874,8 +874,7 @@ object Pipeline {
     val wantLedger = args.drop(2).contains("--ledger")
     val config = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(configPath)), "UTF-8")
-    val spark = GraftSession.local(
-      Runtime.getRuntime.availableProcessors())
+    val spark = GraftSession.local()
     try {
       if (wantLedger) {
         val (out, ledger) = runWithLedger(spark, baseDir, config)

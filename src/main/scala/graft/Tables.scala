@@ -39,4 +39,20 @@ object Tables {
       ("^" + java.util.regex.Pattern.quote(p).replace("*", "\\E.*\\Q") + "$").r)
     names.filter(n => rxs.exists(_.findFirstIn(n).isDefined))
   }
+
+  /** `dir` with every non-alphanumeric character replaced by `_`: the
+    * suffix that keeps a query's stored tables and scratch directories
+    * apart across scale factors. */
+  def suffix(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** A cleared scratch directory for query `name` over the tables in
+    * `dir`: `${java.io.tmpdir}/graft_<name>_<suffix(dir)>`. Anything a
+    * previous run left there is deleted first. */
+  def scratch(spark: SparkSession, dir: String, name: String): String = {
+    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${name}_${suffix(dir)}").getPath
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    path
+  }
 }

@@ -831,9 +831,8 @@ object Analytics {
     import s.implicits._
     // sf-specific table names: the warehouse outlives the JVM, and a
     // sf0.01 layout must never satisfy a sf0.1 run
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val li = s"graft_bkt_lineitem_$sfx"
-    val ord = s"graft_bkt_orders_$sfx"
+    val li = s"graft_bkt_lineitem_${Tables.suffix(dir)}"
+    val ord = s"graft_bkt_orders_${Tables.suffix(dir)}"
     if (!s.catalog.tableExists(li))
       graft.sinks.Bucketing.writeBucketed(
         t(s, dir, "lineitem").select($"l_orderkey", $"l_extendedprice", $"l_discount"),
@@ -1025,8 +1024,7 @@ object Analytics {
   // hive leaves, idempotence). --
   private val q232: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_compact_$sfx"
+    val out = Tables.scratch(s, dir, "compact")
     t(s, dir, "documents").repartition(32, $"doc_id")
       .write.mode("overwrite").parquet(out)
     val stats = graft.sinks.Layout.compact(s, out, 256L * 1024 * 1024)
@@ -1057,8 +1055,7 @@ object Analytics {
   // Exact-int cells only. --
   private val q233: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_zlayout_$sfx"
+    val out = Tables.scratch(s, dir, "zlayout")
     val ev = t(s, dir, "events")
       .select($"event_id", $"user_id", $"event_type")
     graft.sinks.Layout.zorderWrite(ev, "event_id", "user_id", out, 16)
@@ -1091,10 +1088,7 @@ object Analytics {
   // manifest bound off by one breaks it. Exact-int cells. --
   private val q238: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_lake_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "lake")
     val ev = t(s, dir, "events").select($"event_id", $"user_id", $"event_type")
     graft.sinks.Snapshots.writeAppend(ev.repartition(16), out)
     graft.sinks.Snapshots.optimizeZorder(s, out, "event_id", "user_id",

@@ -213,8 +213,7 @@ object CoerceOps {
   // lossless, including the byte accounting. --
   private val q210: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_warc_$sfx"
+    val out = Tables.scratch(s, dir, "warc")
     val d = Tables.load(s, dir, "documents").select(
       concat(lit("https://"), lower($"source"), lit("."), $"lang",
         lit(".example.org/p/"), $"doc_id".cast("string")).as("url"),
@@ -260,8 +259,7 @@ object CoerceOps {
   // match pins both the pushdown's and the residual's semantics. --
   private val q212: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_warc_rehydrate_$sfx"
+    val out = Tables.scratch(s, dir, "warc_rehydrate")
     val d = Tables.load(s, dir, "documents").select(
       concat(lit("https://"), lower($"source"), lit("."), $"lang",
         lit(".example.org/p/"), $"doc_id".cast("string")).as("url"),
@@ -299,8 +297,7 @@ object CoerceOps {
   // contract.) --
   private val q225: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_warc_ccindex_$sfx"
+    val out = Tables.scratch(s, dir, "warc_ccindex")
     val d = Tables.load(s, dir, "documents").select(
       concat(lit("https://"), lower($"source"), lit("."), $"lang",
         lit(".example.org/p/"), $"doc_id".cast("string")).as("url"),
@@ -781,10 +778,7 @@ object CoerceOps {
   // q210 standalone discipline). Exact-int cells. --
   private val q236: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snap_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snap")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.where($"lang" =!= "de"), out)
     graft.sinks.Snapshots.writeAppend(docs.where($"lang" === "de"), out)
@@ -813,10 +807,7 @@ object CoerceOps {
   // appended rows — no old file re-read, none missed. --
   private val q237: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapinc_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapinc")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.where($"lang" =!= "de"), out)
     graft.sinks.Snapshots.writeAppend(docs.where($"lang" === "de"), out)
@@ -841,10 +832,7 @@ object CoerceOps {
   // the hash. --
   private val q239: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapdel_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapdel")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.repartition(8, $"doc_id"), out)
     graft.sinks.Snapshots.deleteWhere(s, out, col("lang") === "de")
@@ -864,10 +852,7 @@ object CoerceOps {
   // insert) live in the hash. --
   private val q240: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapup_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapup")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.repartition(8, $"doc_id"), out)
     val recrawl = docs.where($"lang" === "de")
@@ -893,10 +878,7 @@ object CoerceOps {
   // from the feed is pinned by the hash). --
   private val q241: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapcdc_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapcdc")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.repartition(8, $"doc_id"), out)
     val recrawl = docs.where($"lang" === "de")
@@ -929,10 +911,7 @@ object CoerceOps {
   // from the base and from each other. --
   private val q242: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapconc_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapconc")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(
       docs.where($"lang" =!= "de" && $"lang" =!= "fr"), out)
@@ -965,10 +944,7 @@ object CoerceOps {
   // discipline, here under the DuckDB hash. --
   private val q243: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapcdcs_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapcdcs")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.repartition(8, $"doc_id"), out)
     val recrawl = docs.where($"lang" === "de")
@@ -1000,10 +976,7 @@ object CoerceOps {
   // NULL-fill the late column. The oracle replays that as a CASE. --
   private val q244: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapevo_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapevo")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(
       docs.where($"lang" =!= "de").select($"doc_id", $"source", $"n_chars"), out)
@@ -1025,10 +998,7 @@ object CoerceOps {
   // bounded-rewrite exponent is measured in the §6.1 TimeQ row. --
   private val q245: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapclup_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapclup")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.repartition(8, $"doc_id"), out)
     graft.sinks.Snapshots.optimizeZorderN(s, out, Seq("doc_id"), 256L * 1024)
@@ -1054,13 +1024,8 @@ object CoerceOps {
   // leaked compact all break the hash. --
   private val q246: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snaprepl_src_$sfx"
-    val rep = s"/tmp/graft_snaprepl_rep_$sfx"
-    Seq(out, rep).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-    }
+    val out = Tables.scratch(s, dir, "snaprepl_src")
+    val rep = Tables.scratch(s, dir, "snaprepl_rep")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.repartition(8, $"doc_id"), out)
     val recrawl = docs.where($"lang" === "de")
@@ -1100,10 +1065,7 @@ object CoerceOps {
   // one breaks the hash. --
   private val q247: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapttl_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapttl")
     val events = Tables.load(s, dir, "events")
       .select($"event_id", $"user_id", $"event_type", $"value")
     graft.sinks.Snapshots.writeOverwrite(
@@ -1123,10 +1085,7 @@ object CoerceOps {
   // Oracle = the raw table minus the keyed rows. --
   private val q248: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snaptkd_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snaptkd")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.repartition(8, $"doc_id"), out)
     val takedown = docs.where($"lang" === "fr").select($"doc_id")
@@ -1148,10 +1107,7 @@ object CoerceOps {
   // measured in the SnapBench clusupstr row. --
   private val q249: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapclupstr_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapclupstr")
     val docs = Tables.load(s, dir, "documents")
       .withColumn("doc_key",
         concat(lit("doc-"), lpad($"doc_id".cast("string"), 8, "0")))
@@ -1177,10 +1133,7 @@ object CoerceOps {
   // raw table, so the hash pins that the catalog resolves exactly the
   // committed snapshot. --
   private val q250: Q = (s, dir) => {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_sqlcat_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "sqlcat")
     s.conf.set("spark.sql.catalog.graft", "graft.sql.SnapshotCatalog")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs, out)
@@ -1205,10 +1158,7 @@ object CoerceOps {
   // under the same proof as the Scala API's. --
   private val q251: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_sqltt_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "sqltt")
     s.conf.set("spark.sql.catalog.graft", "graft.sql.SnapshotCatalog")
     val docs = Tables.load(s, dir, "documents")
     graft.sinks.Snapshots.writeOverwrite(docs.where($"lang" =!= "de"), out)
@@ -1237,10 +1187,7 @@ object CoerceOps {
   // row; the q245-family clustering makes the skip selective. --
   private val q252: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_snapskip_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "snapskip")
     val events = Tables.load(s, dir, "events")
       .select($"event_id", $"user_id", $"event_type", $"value")
     graft.sinks.Snapshots.writeOverwrite(
@@ -1265,10 +1212,7 @@ object CoerceOps {
   // the raw table, so a lost insert, a double-applied CTAS, or a
   // schema drift between the SQL and API writers breaks the hash. --
   private val q253: Q = (s, dir) => {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_sqlins_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "sqlins")
     s.conf.set("spark.sql.catalog.graft", "graft.sql.SnapshotCatalog")
     Tables.load(s, dir, "documents").createOrReplaceTempView("q253_docs")
     s.sql(s"""CREATE TABLE graft.`$out` AS
@@ -1290,10 +1234,7 @@ object CoerceOps {
   // a rewritten file or lost from an untouched one breaks the hash. --
   private val q254: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_sqldel_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "sqldel")
     s.conf.set("spark.sql.catalog.graft", "graft.sql.SnapshotCatalog")
     val events = Tables.load(s, dir, "events")
       .select($"event_id", $"user_id", $"event_type", $"value")
@@ -1316,10 +1257,7 @@ object CoerceOps {
   // table under the renamed projection. --
   private val q255: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"/tmp/graft_rename_$sfx"
-    val root = new org.apache.hadoop.fs.Path(out)
-    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    val out = Tables.scratch(s, dir, "rename")
     val docs = Tables.load(s, dir, "documents")
       .select($"doc_id", $"lang", $"n_chars")
     graft.sinks.Snapshots.writeOverwrite(

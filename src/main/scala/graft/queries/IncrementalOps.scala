@@ -62,8 +62,7 @@ object IncrementalOps {
     // the PERSISTED store path (Winnow.writeFpStore/probeStore): the
     // corpus's fps land bucketed+stamped once, the probe replays the
     // stamped (k, w) and joins exchange-free on the store side
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val t = s"graft_winnowstore_$sfx"
+    val t = s"graft_winnowstore_${Tables.suffix(dir)}"
     s.sql(s"DROP TABLE IF EXISTS `$t`")
     graft.operators.Winnow.writeFpStore(docs(s, dir), "text", "doc_id",
       t, buckets = 8, k = 4, w = 4)
@@ -1107,8 +1106,7 @@ object IncrementalOps {
     val copies = d.filter(col("doc_id") < 50)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
     val corpus = d.unionByName(copies)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val table = s"graft_takedown_fp_$sfx"
+    val table = s"graft_takedown_fp_${Tables.suffix(dir)}"
     // the cycle IS the query: fresh store + clean tombstones every run
     s.sql(s"DROP TABLE IF EXISTS " +
       s"`${graft.operators.Takedown.tombstoneTable(table)}`")
@@ -1142,8 +1140,7 @@ object IncrementalOps {
     val copies = d.filter(col("doc_id") < 50)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
     val corpus = d.unionByName(copies)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val table = s"graft_takedown_sig_$sfx"
+    val table = s"graft_takedown_sig_${Tables.suffix(dir)}"
     s.sql(s"DROP TABLE IF EXISTS " +
       s"`${graft.operators.Takedown.tombstoneTable(table)}`")
     Dedup.writeSignatureStore(corpus, "text", table, buckets = 8)

@@ -2965,8 +2965,7 @@ object TextOps {
   // the gate swapped — the oracle never sees the store, which is the
   // point: stored-and-read-back must equal freshly-computed. --
   private val q207: Q = (s, dir) => {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"/tmp/graft_cardstore_$sfx"
+    val path = Tables.scratch(s, dir, "cardstore")
     val d = docs(s, dir)
     val gated = d.filter(size(Text.tokens(col("text"))) >= 50)
     def card(df: DataFrame) = graft.operators.CorpusReport.build(

@@ -1185,8 +1185,7 @@ object VectorOps {
   // a previous run's already-appended state). --
   private val q161: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val t = s"graft_knnstore_$sfx"
+    val t = s"graft_knnstore_${Tables.suffix(dir)}"
     Seq(graft.operators.Similarity.knnVectorsTable(t),
       graft.operators.Similarity.knnEdgesTable(t)).foreach { tbl =>
       s.sql(s"DROP TABLE IF EXISTS `$tbl`")
@@ -1362,8 +1361,7 @@ object VectorOps {
   // fifth — the stamp semantics made hash-observable). --
   private val q185: Q = (s, dir) => {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val t = s"graft_marginstore_$sfx"
+    val t = s"graft_marginstore_${Tables.suffix(dir)}"
     Seq(graft.operators.Similarity.marginVectorsTable(t),
       graft.operators.Similarity.marginSigsTable(t)).foreach { tbl =>
       s.sql(s"DROP TABLE IF EXISTS `$tbl`")

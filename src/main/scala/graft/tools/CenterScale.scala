@@ -1,9 +1,11 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
 import graft.operators.{DocEmbed, Similarity}
+import graft.tools.Prof.timed
 
 /** Dev tool: measures what CENTERING the LSH hyperplanes
   * ([[graft.operators.Similarity.corpusCenter]] →
@@ -21,39 +23,40 @@ import graft.operators.{DocEmbed, Similarity}
   * SURVEY §6. */
 object CenterScale {
 
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/tmp/scale_x10")
-    val nQ = args.lift(1).map(_.toInt).getOrElse(500)
-    val spark = GraftSession.local(32)
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"== $label: ${(System.nanoTime() - t0) / 1e9}%.1f s"); r
-    }
-    val docs = Tables.load(spark, dir, "documents")
-    val emb = time("derive+checkpoint")(
-      DocEmbed.hashedProjection(docs, "text", "doc_id").localCheckpoint())
-    val n = emb.count()
-    val center = time("corpusCenter")(
-      Similarity.corpusCenter(emb, "doc_id", "embedding"))
-    val bitsPlain = time("autoBitsSkewAware(plain)")(
-      Similarity.autoBitsSkewAware(emb, "doc_id", "embedding", tables = 2))
-    val bitsCentered = time("autoBitsSkewAware(centered)")(
-      Similarity.autoBitsSkewAware(emb, "doc_id", "embedding", tables = 2,
-        center = center))
-    println(s"== n=$n bitsPlain=$bitsPlain bitsCentered=$bitsCentered")
-    def mass(bits: Int, c: Seq[Double]): Long = (0 until 2).map { t =>
+  /** Candidate pairs (Σ b·(b−1)/2 over buckets) of two sign-LSH tables of
+    * `bits` bits each over `emb`'s `embedding`, with hyperplanes through
+    * `center` (the origin when empty). */
+  def mass(emb: DataFrame, bits: Int, center: Seq[Double] = Nil): Long =
+    (0 until 2).map { t =>
       val bucket =
-        if (c.isEmpty)
+        if (center.isEmpty)
           graft.functions.Vectors.signBucketAt(col("embedding"), bits, t * bits)
         else graft.functions.Vectors.signBucketCenteredAt(
-          col("embedding"), bits, t * bits, c)
+          col("embedding"), bits, t * bits, center)
       emb.groupBy(bucket.as("b")).count()
         .agg(sum(col("count") * (col("count") - 1L)))
         .head().getLong(0) / 2
     }.sum
-    println(s"== candMass(plain@$bitsPlain)=${mass(bitsPlain, Nil)} " +
-      s"candMass(centered@$bitsCentered)=${mass(bitsCentered, center)} " +
+
+  def main(args: Array[String]): Unit = {
+    val dir = args.headOption.getOrElse("/tmp/scale_x10")
+    val nQ = args.lift(1).map(_.toInt).getOrElse(500)
+    val spark = GraftSession.local()
+    spark.sparkContext.setLogLevel("ERROR")
+    val docs = Tables.load(spark, dir, "documents")
+    val emb = timed("derive+checkpoint")(
+      DocEmbed.hashedProjection(docs, "text", "doc_id").localCheckpoint())
+    val n = emb.count()
+    val center = timed("corpusCenter")(
+      Similarity.corpusCenter(emb, "doc_id", "embedding"))
+    val bitsPlain = timed("autoBitsSkewAware(plain)")(
+      Similarity.autoBitsSkewAware(emb, "doc_id", "embedding", tables = 2))
+    val bitsCentered = timed("autoBitsSkewAware(centered)")(
+      Similarity.autoBitsSkewAware(emb, "doc_id", "embedding", tables = 2,
+        center = center))
+    println(s"== n=$n bitsPlain=$bitsPlain bitsCentered=$bitsCentered")
+    println(s"== candMass(plain@$bitsPlain)=${mass(emb, bitsPlain)} " +
+      s"candMass(centered@$bitsCentered)=${mass(emb, bitsCentered, center)} " +
       s"uniformTarget=${n * 64 * 2}")
     // exact ground truth over a deterministic md5 query sample — the
     // recall axis: centering must not pay for its cost win in quality
@@ -61,17 +64,20 @@ object CenterScale {
       .withColumn("__h", md5(concat(col("doc_id").cast("string"), lit(":cs"))))
       .orderBy(col("__h"), col("doc_id")).limit(nQ)
       .select(col("doc_id"), col("embedding")).localCheckpoint()
-    val exact = time("exact cosineTopK")(
+    val exact = timed("exact cosineTopK")(
       Similarity.cosineTopK(emb, qs, "doc_id", "embedding", k = 3)
         .localCheckpoint())
-    def run(label: String, bits: Int, c: Seq[Double]): Unit = {
-      val g = time(s"knnGraph@$label($bits bits)")(
-        Similarity.knnGraph(emb, "doc_id", "embedding", k = 3, bits = bits,
+    def recall(corpus: DataFrame, truth: DataFrame, label: String, bits: Int,
+        c: Seq[Double]): Unit = {
+      val g = timed(s"knnGraph@$label($bits bits)")(
+        Similarity.knnGraph(corpus, "doc_id", "embedding", k = 3, bits = bits,
             tables = 2, center = c).localCheckpoint())
-      val r = Similarity.recallAtK(exact, g, "doc_id", k = 3)
+      val r = Similarity.recallAtK(truth, g, "doc_id", k = 3)
         .agg(avg(col("recall"))).head().getDouble(0)
-      println(f"== recall@3($label@$bits, mass=${mass(bits, c)}) = $r%.4f")
+      println(f"== recall@3($label@$bits, mass=${mass(corpus, bits, c)}) = $r%.4f")
     }
+    def run(label: String, bits: Int, c: Seq[Double]): Unit =
+      recall(emb, exact, label, bits, c)
     run("plain", bitsPlain, Nil)
     run("centered", bitsCentered, center)
     // the frontier: recall at equal-bits points for both families —
@@ -88,30 +94,18 @@ object CenterScale {
     val cemb = emb.select(col("doc_id"),
       graft.functions.Vectors.centered(col("embedding"), center)
         .as("embedding")).localCheckpoint()
-    val bitsC2 = time("autoBitsSkewAware(centered-emb)")(
+    val bitsC2 = timed("autoBitsSkewAware(centered-emb)")(
       Similarity.autoBitsSkewAware(cemb, "doc_id", "embedding", tables = 2))
     println(s"== centered-embedding corpus settles at $bitsC2 bits " +
       s"(formula=${Similarity.autoBits(n, 64, 2)})")
-    val exactC = time("exact centered cosineTopK")(
+    val exactC = timed("exact centered cosineTopK")(
       Similarity.cosineTopK(cemb,
         qs.select(col("doc_id"),
           graft.functions.Vectors.centered(col("embedding"), center)
             .as("embedding")),
         "doc_id", "embedding", k = 3).localCheckpoint())
-    def massC(bits: Int): Long = (0 until 2).map { t =>
-      cemb.groupBy(graft.functions.Vectors
-          .signBucketAt(col("embedding"), bits, t * bits).as("b"))
-        .count().agg(sum(col("count") * (col("count") - 1L)))
-        .head().getLong(0) / 2
-    }.sum
-    (bitsC2 - 1 to bitsC2 + 1).filter(_ >= 1).foreach { b =>
-      val gC = time(s"knnGraph@centered-emb($b bits)")(
-        Similarity.knnGraph(cemb, "doc_id", "embedding", k = 3, bits = b,
-            tables = 2).localCheckpoint())
-      val rC = Similarity.recallAtK(exactC, gC, "doc_id", k = 3)
-        .agg(avg(col("recall"))).head().getDouble(0)
-      println(f"== recall@3(centered-emb@$b, mass=${massC(b)}) = $rC%.4f")
-    }
+    (bitsC2 - 1 to bitsC2 + 1).filter(_ >= 1)
+      .foreach(b => recall(cemb, exactC, "centered-emb", b, Nil))
     spark.stop()
   }
 }

@@ -17,16 +17,11 @@ object KnnScale {
     val bits = args(1).toInt
     val tables = args(2).toInt
     val runs = if (args.length > 3) args(3).toInt else 2
-    val spark = GraftSession.local(32)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val times = (1 to runs).map { _ =>
-      val t0 = System.nanoTime()
+    val times = (1 to runs).map(_ => graft.Bench.noop(
       graft.operators.Similarity.knnGraph(emb, "vec_id", "embedding",
-        k = 5, bits = bits, tables = tables)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+        k = 5, bits = bits, tables = tables)))
     println(f"knnGraph bits=$bits tables=$tables n=${emb.count()}: " +
       times.map(t => f"$t%6.2f").mkString(" "))
     spark.stop()

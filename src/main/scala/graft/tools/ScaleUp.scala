@@ -45,8 +45,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(in, out, kStr) = args.take(3)
     val k = kStr.toInt
-    val spark = GraftSession.local(32)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val copies = spark.range(k.toLong).toDF("c")
 

@@ -3,7 +3,10 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
+import graft.Bench.noop
 import graft.operators.{DocEmbed, Similarity}
+import graft.tools.CenterScale.mass
+import graft.tools.Prof.timed
 
 /** Dev tool: measures what [[graft.operators.Similarity.autoBitsSkewAware]]
   * buys on the skewed hashed-BoW corpus at scale — formula vs measured
@@ -15,35 +18,23 @@ object SkewScale {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/scale_x100")
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"== $label: ${(System.nanoTime() - t0) / 1e9}%.1f s"); r
-    }
     val docs = Tables.load(spark, dir, "documents")
-    val emb = time("derive+checkpoint")(
+    val emb = timed("derive+checkpoint")(
       DocEmbed.hashedProjection(docs, "text", "doc_id").localCheckpoint())
     val n = emb.count()
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val formula = Similarity.autoBits(n, dim, tables = 2)
-    val measured = time("autoBitsSkewAware")(
+    val measured = timed("autoBitsSkewAware")(
       Similarity.autoBitsSkewAware(emb, "doc_id", "embedding", tables = 2))
     println(s"== n=$n dim=$dim formulaBits=$formula measuredBits=$measured")
-    def mass(bits: Int): Long = (0 until 2).map { t =>
-      emb.groupBy(graft.functions.Vectors
-          .signBucketAt(col("embedding"), bits, t * bits).as("b"))
-        .count()
-        .agg(sum(col("count") * (col("count") - 1L)))
-        .head().getLong(0) / 2
-    }.sum
-    println(s"== candMass(formula)=${mass(formula)} " +
-      s"candMass(measured)=${mass(measured)} uniformTarget=${n * 64 * 2}")
+    println(s"== candMass(formula)=${mass(emb, formula)} " +
+      s"candMass(measured)=${mass(emb, measured)} uniformTarget=${n * 64 * 2}")
     Seq(("formula", formula), ("measured", measured)).foreach { case (l, b) =>
-      time(s"knnGraph@$l($b bits)")(
+      timed(s"knnGraph@$l($b bits)")(noop(
         Similarity.knnGraph(emb, "doc_id", "embedding", k = 3, bits = b,
-            tables = 2)
-          .write.format("noop").mode("overwrite").save())
+            tables = 2)))
     }
     spark.stop()
   }

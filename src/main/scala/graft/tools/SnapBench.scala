@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.sinks.Snapshots
+import graft.Bench.{noop, seconds}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: measured evidence for the snapshot log's operational
@@ -37,6 +38,10 @@ object SnapBench {
     new java.io.File(d).delete(); d
   }
 
+  /** Median wall seconds of five runs of `f`. */
+  private def median5(f: => Unit): Double =
+    (1 to 5).map(_ => seconds(f)).sorted.apply(2)
+
   private def frame(spark: SparkSession, i: Int) = {
     import spark.implicits._
     Seq((i.toLong, s"row $i")).toDF("id", "text")
@@ -44,10 +49,8 @@ object SnapBench {
 
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "writers"
-    val spark = GraftSession.local(32)
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(10000).selectExpr("sum(id)")
-      .write.format("noop").mode("overwrite").save() // warm codegen
+    val spark = GraftSession.local()
+    noop(spark.range(10000).selectExpr("sum(id)")) // warm codegen
     mode match {
       case "writers" => writers(spark)
       case "polls" => polls(spark)
@@ -77,15 +80,10 @@ object SnapBench {
     val rows = (0 until 65536).map(i => (i.toLong, s"row $i")).toDF("id", "text")
     Snapshots.writeAppend(rows.repartitionByRange(256, col("id")), dir)
     val files = Snapshots.versions(spark, dir).head.files.size
-    def timePrune(): Double = {
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        val kept = Snapshots.prunedRead(spark, dir, "id", 1000, 1999)
-          .inputFiles.length
-        require(kept <= 8, s"prune failed: $kept files kept")
-        (System.nanoTime() - t0) / 1e9
-      }
-      times.sorted.apply(2)
+    def timePrune(): Double = median5 {
+      val kept = Snapshots.prunedRead(spark, dir, "id", 1000, 1999)
+        .inputFiles.length
+      require(kept <= 8, s"prune failed: $kept files kept")
     }
     Snapshots.read(spark, dir).count() // warm
     timePrune() // warm the prune path itself
@@ -114,15 +112,10 @@ object SnapBench {
     val dir = freshDir()
     val rows = (0 until 65536).map(i => (i.toLong, s"row $i")).toDF("id", "text")
     Snapshots.writeAppend(rows.repartitionByRange(256, col("id")), dir)
-    def timeQ(): Double = {
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        val n = Snapshots.read(spark, dir)
-          .where(col("id") >= 1000 && col("id") <= 1999).count()
-        require(n == 1000, s"wrong count: $n")
-        (System.nanoTime() - t0) / 1e9
-      }
-      times.sorted.apply(2)
+    def timeQ(): Double = median5 {
+      val n = Snapshots.read(spark, dir)
+        .where(col("id") >= 1000 && col("id") <= 1999).count()
+      require(n == 1000, s"wrong count: $n")
     }
     timeQ() // warm
     val skipSec = timeQ()
@@ -167,10 +160,8 @@ object SnapBench {
       java.nio.file.Files.writeString(
         new java.io.File(new java.io.File(dir, "_graft_log"),
           "v00001.json").toPath, entry)
-      val t0 = System.nanoTime()
-      require(Snapshots.writeAppend(Seq((1L, "row")).toDF("id", "text"),
-        dir) == 2)
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = seconds(require(
+        Snapshots.writeAppend(Seq((1L, "row")).toDF("id", "text"), dir) == 2))
       val bytes = new java.io.File(new java.io.File(dir, "_graft_log"),
         "v00002.json").length
       (bytes, sec)
@@ -212,9 +203,7 @@ object SnapBench {
       if (cluster)
         Snapshots.optimizeZorderN(spark, dir, Seq(key), 4L * 1024 * 1024)
       val before = Snapshots.versions(spark, dir).last
-      val t0 = System.nanoTime()
-      Snapshots.upsert(updates, dir, key)
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = seconds(Snapshots.upsert(updates, dir, key))
       val after = Snapshots.versions(spark, dir).last
       val rewritten = before.files.count(f => !after.files.contains(f))
       (sec, rewritten, before.files.size)
@@ -242,14 +231,8 @@ object SnapBench {
     // time PLAN construction only — `spark.read.parquet` resolves the
     // schema eagerly, so this isolates exactly the metadata cost the
     // logged schema removes (the scan itself is identical both ways)
-    def timePlan(): Double = {
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        require(Snapshots.read(spark, dir).schema.fieldNames.length == 2)
-        (System.nanoTime() - t0) / 1e9
-      }
-      times.sorted.apply(2)
-    }
+    def timePlan(): Double = median5(
+      require(Snapshots.read(spark, dir).schema.fieldNames.length == 2))
     Snapshots.read(spark, dir).count() // warm
     val zeroStat = timePlan() // schema + sizes logged: no FS call at all
     val entry = Snapshots.versions(spark, dir).head
@@ -278,27 +261,26 @@ object SnapBench {
     // single-writer baseline: 16 sequential appends
     val seqDir = freshDir()
     Snapshots.writeAppend(frame(spark, 0), seqDir)
-    val t0 = System.nanoTime()
-    (1 to 16).foreach(i => Snapshots.writeAppend(frame(spark, i), seqDir))
-    val seqSec = (System.nanoTime() - t0) / 1e9
+    val seqSec = seconds(
+      (1 to 16).foreach(i => Snapshots.writeAppend(frame(spark, i), seqDir)))
     // four concurrent writers, 4 appends each
     val conDir = freshDir()
     Snapshots.writeAppend(frame(spark, 0), conDir)
     val barrier = new java.util.concurrent.CyclicBarrier(4)
     val errs = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Throwable]())
-    val t1 = System.nanoTime()
-    val threads = (0 until 4).map { w =>
-      new Thread(() => {
-        try {
-          barrier.await()
-          (1 to 4).foreach(i => Snapshots.writeAppend(
-            frame(spark, w * 100 + i), conDir))
-        } catch { case t: Throwable => errs.add(t) }
-      })
+    val conSec = seconds {
+      val threads = (0 until 4).map { w =>
+        new Thread(() => {
+          try {
+            barrier.await()
+            (1 to 4).foreach(i => Snapshots.writeAppend(
+              frame(spark, w * 100 + i), conDir))
+          } catch { case t: Throwable => errs.add(t) }
+        })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join(600000))
     }
-    threads.foreach(_.start()); threads.foreach(_.join(600000))
-    val conSec = (System.nanoTime() - t1) / 1e9
     require(errs.isEmpty, errs.toString)
     val vs = Snapshots.versions(spark, conDir)
     require(vs.map(_.version) == (1 to 17), s"versions: ${vs.map(_.version)}")
@@ -319,13 +301,10 @@ object SnapBench {
     def poll(dir: String, commits: Int): Double = {
       // warm once, then median of 5
       Snapshots.addedSince(spark, dir, commits - 1).count()
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
+      median5 {
         val n = Snapshots.addedSince(spark, dir, commits - 1).count()
         require(n == 1, s"delta rows: $n")
-        (System.nanoTime() - t0) / 1e9
       }
-      times.sorted.apply(2)
     }
     val d25 = build(25)
     val d200 = build(200)
