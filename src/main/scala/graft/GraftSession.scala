@@ -61,6 +61,14 @@ object GraftSession {
     // every run (observed: identical queries swinging 0.7 s <-> 3.6 s run
     // to run). The entries are compiled classes — cheap next to the heap.
     .config("spark.sql.codegen.cache.maxEntries", "2000")
+    // `file:` without a forked `chmod` per created file and directory, for
+    // FileSystem and FileContext users alike (graft.sinks.LocalFs).
+    // FileSystem.CACHE keys on the scheme, not the conf: the pin holds
+    // when the session makes the JVM's first `file:` instance.
+    .config("spark.hadoop.fs.file.impl",
+      classOf[graft.sinks.NoForkLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.sinks.NoForkLocalFs].getName)
 
   /** A tuned local session; every entry point's core count defaults to
     * `SPARK_GRAFT_CPUS`, else all available processors. */

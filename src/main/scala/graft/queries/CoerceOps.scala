@@ -187,7 +187,7 @@ object CoerceOps {
   private val q48: Q = (s, dir) => {
     import graft.{DumpJob, Tables}
     import graft.sinks.Sink
-    val out = java.nio.file.Files.createTempDirectory("graft_q48").toString
+    val out = Tables.scratch(s, dir, "q48")
     DumpJob.run(s, dir, out, DumpJob.Config(
       pattern = "supplier", sink = Sink.Config(format = "text")))
     val (schema, _) = EsMapping.toStructType(
@@ -363,7 +363,7 @@ object CoerceOps {
   private val q54: Q = (s, dir) => {
     import graft.{DumpJob, Tables}
     import graft.sinks.Sink
-    val out = java.nio.file.Files.createTempDirectory("graft_q54").toString
+    val out = Tables.scratch(s, dir, "q54")
     DumpJob.run(s, dir, out, DumpJob.Config(
       pattern = "region", sink = Sink.Config(format = "csv")))
     val raw = s.read.option("header", true).csv(s"$out/region")
@@ -380,7 +380,7 @@ object CoerceOps {
   private val q55: Q = (s, dir) => {
     import graft.{DumpJob, Tables}
     import graft.sinks.Sink
-    val out = java.nio.file.Files.createTempDirectory("graft_q55").toString
+    val out = Tables.scratch(s, dir, "q55")
     DumpJob.run(s, dir, out, DumpJob.Config(
       pattern = "nation", sink = Sink.Config(format = "json")))
     val (schema, _) = EsMapping.toStructType(
@@ -403,7 +403,7 @@ object CoerceOps {
   private val q218: Q = (s, dir) => {
     import graft.DumpJob
     import graft.sinks.Sink
-    val out = java.nio.file.Files.createTempDirectory("graft_q218").toString
+    val out = Tables.scratch(s, dir, "q218")
     DumpJob.run(s, dir, out, DumpJob.Config(
       pattern = "orders",
       sink = Sink.Config(format = "orc", compression = Some("zstd"))))
@@ -420,7 +420,7 @@ object CoerceOps {
   // time, zero data cost — pinned here against an oracle that states
   // the widening explicitly (NULL AS lang for the old snapshot). --
   private val q221: Q = (s, dir) => {
-    val out = java.nio.file.Files.createTempDirectory("graft_q221").toString
+    val out = Tables.scratch(s, dir, "q221")
     val d = graft.Tables.load(s, dir, "documents")
     d.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("text"))
       .write.mode("overwrite").parquet(s"$out/snap_a")
@@ -953,13 +953,12 @@ object CoerceOps {
     graft.sinks.Snapshots.upsert(recrawl, out, "doc_id")
     graft.sinks.Snapshots.deleteWhere(s, out, col("lang") === "fr")
     graft.sinks.Snapshots.compact(s, out, 512L * 1024 * 1024)
-    val sink = java.nio.file.Files.createTempDirectory("graft_cdc_sink").toString
+    val sink = Tables.scratch(s, dir, "cdc_sink")
     val q = graft.sinks.Snapshots.readChangesStream(s, out,
         startingVersion = 1, maxVersionsPerTrigger = 2)
       .writeStream.format("parquet")
       .option("path", sink)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_cdc_ckpt").toString)
+      .option("checkpointLocation", Tables.scratch(s, dir, "cdc_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(600000)
     s.read.parquet(sink)
@@ -1042,8 +1041,7 @@ object CoerceOps {
         maxVersionsPerTrigger = 2)
       .writeStream.format("graft-snapshot")
       .option("path", rep).option("keyCol", "doc_id")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_repl_ckpt").toString)
+      .option("checkpointLocation", Tables.scratch(s, dir, "repl_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(600000)
     graft.sinks.Snapshots.read(s, rep)

@@ -27,6 +27,15 @@ import org.apache.spark.sql.DataFrame
   * `part-*` names; `write` renames the committed files to the reference
   * pattern afterwards (SURVEY §7.3: rename pass, don't fight the
   * committer).
+  *
+  * Commit path, for a local `dir`: Spark's file committer makes the job
+  * and task attempt directories under `dir/_temporary`, each task writes
+  * its rotated files there with a `.crc` sidecar, job commit moves them up
+  * and writes `_SUCCESS`, and `rename` gives them their final names. All
+  * of it goes through the session's `file:` filesystem, [[LocalFs]]: the
+  * same files, modes and sidecars as Hadoop's local filesystem, without a
+  * forked `chmod` per file and directory, and a `rename` that refuses an
+  * existing destination file, so no renamed file overwrites another.
   */
 object Sink {
 

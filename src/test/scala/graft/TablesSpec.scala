@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class TablesSpec extends SparkSpec {
 
@@ -13,5 +14,17 @@ class TablesSpec extends SparkSpec {
     Files.writeString(Paths.get(dir, "sub", "part-0"), "stale")
     assert(Tables.scratch(spark, "/fixtures/sf-0.1", "tables_spec") == dir)
     assert(!Files.exists(Paths.get(dir)))
+  }
+
+  test("queries take their directories from scratch, never " +
+      "createTempDirectory (a fresh directory per call is never deleted)") {
+    val root = Paths.get("src/main/scala/graft/queries")
+    assert(Files.isDirectory(root))
+    val offenders = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("createTempDirectory") => s"$f:${i + 1}"
+      }).toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
