@@ -14,7 +14,7 @@ object SparkEntry {
     * contract, README.md:99-103).
     */
   def entry(spark: SparkSession): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_entry").toString
+    val out = Tables.scratch(spark, "sf0.001", "entry")
     val results = DumpJob.run(spark, "/root/testdata/sf0.001", out,
       DumpJob.Config(
         pattern = "lineitem",

@@ -242,15 +242,9 @@ object Dedup {
   def appendToFingerprintStore(admitted: DataFrame, textCol: String,
                                table: String): Unit = {
     val spark = admitted.sparkSession
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$table' is not a bucketed store table")).numBuckets
-    fingerprintStore(admitted, textCol)
-      .join(spark.table(table), Seq("fp"), "left_anti")
-      .repartition(buckets, col("fp"))
-      .write.mode("append").insertInto(table)
+    graft.sinks.Bucketing.spec(spark, table) // finish a swap before the anti-join
+    graft.sinks.Bucketing.append(fingerprintStore(admitted, textCol)
+      .join(spark.table(table), Seq("fp"), "left_anti"), table)
   }
 
   /** The NEAR-dup analogue of [[fingerprintStore]]: the corpus's
@@ -426,15 +420,10 @@ object Dedup {
                              table: String,
                              shingle: Int = 5, bands: Int = 4): Unit = {
     val spark = admitted.sparkSession
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$table' is not a bucketed store table")).numBuckets
-    signatureStore(admitted, textCol, shingle, bands)
-      .join(spark.table(table), Seq("band", "sig"), "left_anti")
-      .repartition(buckets, col("band"), col("sig"))
-      .write.mode("append").insertInto(table)
+    graft.sinks.Bucketing.spec(spark, table) // finish a swap before the anti-join
+    graft.sinks.Bucketing.append(
+      signatureStore(admitted, textCol, shingle, bands)
+        .join(spark.table(table), Seq("band", "sig"), "left_anti"), table)
   }
 
   /** Incremental NEAR-dup dedup — [[againstCorpus]] for document SHAPES

@@ -83,32 +83,23 @@ object SearchStore {
   def append(batch: DataFrame, textCol: String, idCol: String,
              name: String): Unit = {
     val spark = batch.sparkSession
-    def buckets(t: String): Int =
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(t))
-        .bucketSpec.getOrElse(throw new IllegalArgumentException(
-          s"'$t' is not a bucketed store table")).numBuckets
+    val (pt, tt, dt) = (s"${name}_postings", s"${name}_termstats", s"${name}_docs")
+    // an interrupted swap completes before the anti-joins read the tables
+    Seq(pt, dt).foreach(graft.sinks.Bucketing.spec(spark, _))
     // materialized once (batch-sized): feeds both the postings insert
     // and the termstats rows, and pins the anti-join against re-derive
     val newP = postings(batch, textCol, idCol)
-      .join(spark.table(s"${name}_postings").select(col("token"), col("id")),
+      .join(spark.table(pt).select(col("token"), col("id")),
         Seq("token", "id"), "left_anti")
       .localCheckpoint()
-    newP
-      .repartition(buckets(s"${name}_postings"), col("token"))
-      .write.mode("append").insertInto(s"${name}_postings")
+    graft.sinks.Bucketing.append(newP, pt)
     // term stats are append-only rows aggregated at query time; deriving
     // them from the ANTI-JOINED postings keeps double-commits no-ops
-    newP
+    graft.sinks.Bucketing.append(newP
       .groupBy(col("token"))
-      .agg(max(col("tf")).as("max_tf"), min(col("dl")).as("min_dl"))
-      .repartition(buckets(s"${name}_termstats"), col("token"))
-      .write.mode("append").insertInto(s"${name}_termstats")
-    docLengths(batch, textCol, idCol)
-      .join(spark.table(s"${name}_docs").select(col("id")),
-        Seq("id"), "left_anti")
-      .repartition(buckets(s"${name}_docs"), col("id"))
-      .write.mode("append").insertInto(s"${name}_docs")
+      .agg(max(col("tf")).as("max_tf"), min(col("dl")).as("min_dl")), tt)
+    graft.sinks.Bucketing.append(docLengths(batch, textCol, idCol)
+      .join(spark.table(dt).select(col("id")), Seq("id"), "left_anti"), dt)
   }
 
   /** Top-`k` documents by summed BM25 over `terms`, from pure frames —

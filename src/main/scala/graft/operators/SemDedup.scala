@@ -130,34 +130,29 @@ object SemDedup {
     d.map("%02x".format(_)).mkString
   }
 
-  private def storedCentroidFp(spark: org.apache.spark.sql.SparkSession,
-                               table: String): Option[String] =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.get(CentroidsProp)
-
   private def requireCentroidsMatch(spark: org.apache.spark.sql.SparkSession,
       table: String, centroids: DataFrame, centroidIdCol: String,
-      embCol: String): Unit = storedCentroidFp(spark, table) match {
-    case Some(stored) =>
-      val probe = centroidFingerprint(centroids, centroidIdCol, embCol)
-      require(stored == probe,
-        s"centroid set mismatch for semantic store '$table': the store " +
-          s"was clustered under $stored but the probe holds $probe — a " +
-          "mismatched probe would silently search the wrong clusters; " +
-          "refresh with remapSemanticStore or pass the original centroids")
-    case None =>
-      // an unstamped store is NOT grandfathered in: it is what a crash
-      // between writeSemanticStore's bucketed write and its property
-      // stamp leaves behind, and silently accepting it under any
-      // centroid set is exactly the corruption the guard exists to stop.
-      // Recovery is one idempotent call with the original centroids.
-      throw new IllegalArgumentException(
-        s"semantic store '$table' has no centroid fingerprint stamp " +
-          "(interrupted write?) — if these are the centroids it was " +
-          "clustered under, re-stamp with stampSemanticStore(spark, " +
-          "table, centroids, ...); otherwise rebuild or remap the store")
-  }
+      embCol: String): Unit =
+    graft.sinks.Bucketing.stamped(spark, table, CentroidsProp) match {
+      case Some(stored) =>
+        val probe = centroidFingerprint(centroids, centroidIdCol, embCol)
+        require(stored == probe,
+          s"centroid set mismatch for semantic store '$table': the store " +
+            s"was clustered under $stored but the probe holds $probe — a " +
+            "mismatched probe would silently search the wrong clusters; " +
+            "refresh with remapSemanticStore or pass the original centroids")
+      case None =>
+        // an unstamped store is NOT grandfathered in: it is what a crash
+        // between writeSemanticStore's bucketed write and its property
+        // stamp leaves behind, and silently accepting it under any
+        // centroid set is exactly the corruption the guard exists to stop.
+        // Recovery is one idempotent call with the original centroids.
+        throw new IllegalArgumentException(
+          s"semantic store '$table' has no centroid fingerprint stamp " +
+            "(interrupted write?) — if these are the centroids it was " +
+            "clustered under, re-stamp with stampSemanticStore(spark, " +
+            "table, centroids, ...); otherwise rebuild or remap the store")
+    }
 
   /** Re-stamps `table`'s centroid fingerprint — the recovery step for a
     * store whose [[writeSemanticStore]] was interrupted between the
@@ -165,11 +160,9 @@ object SemDedup {
     * ARE the centroids the store was clustered under; idempotent. */
   def stampSemanticStore(spark: org.apache.spark.sql.SparkSession,
                          table: String, centroids: DataFrame,
-                         centroidIdCol: String, embCol: String): Unit = {
-    val fp = centroidFingerprint(centroids, centroidIdCol, embCol)
-    spark.sql(
-      s"ALTER TABLE `$table` SET TBLPROPERTIES ('$CentroidsProp' = '$fp')")
-  }
+                         centroidIdCol: String, embCol: String): Unit =
+    graft.sinks.Bucketing.stamp(spark, table, CentroidsProp,
+      centroidFingerprint(centroids, centroidIdCol, embCol))
 
   /** Persists [[semanticStore]] bucketed on the cluster id, stamping the
     * centroid-set fingerprint as a table property so every later commit
@@ -181,9 +174,8 @@ object SemDedup {
     graft.sinks.Bucketing.writeBucketed(
       semanticStore(corpus, centroids, idCol, embCol, centroidIdCol),
       table, Seq("cluster"), buckets)
-    val fp = centroidFingerprint(centroids, centroidIdCol, embCol)
-    corpus.sparkSession.sql(
-      s"ALTER TABLE `$table` SET TBLPROPERTIES ('$CentroidsProp' = '$fp')")
+    stampSemanticStore(corpus.sparkSession, table, centroids, centroidIdCol,
+      embCol)
   }
 
   /** The CHECKED accessor for a persisted semantic store: verifies the
@@ -212,37 +204,20 @@ object SemDedup {
     * Cost is the honest one: a full rewrite of the store (assignment is
     * the narrow ivfAssign fold; the bucketed write is the one shuffle on
     * the new cluster id) — run it as the deliberate maintenance step it
-    * is. Staged + swapped like [[graft.sinks.Bucketing.compactBucketed]]:
-    * never lossy, rerun to converge. */
+    * is. Staged + swapped by
+    * [[graft.sinks.Bucketing.overwriteBucketedStaged]], the new
+    * fingerprint stamped onto the staging copy: never lossy, rerun to
+    * converge, and an interrupted swap completes on the next open. */
   def remapSemanticStore(spark: org.apache.spark.sql.SparkSession,
                          table: String, newCentroids: DataFrame,
                          idCol: String, embCol: String,
                          centroidIdCol: String): Unit = {
-    val catalog = spark.sessionState.catalog
-    val staging = table + "__remapping"
-    val fp = centroidFingerprint(newCentroids, centroidIdCol, embCol)
-    if (!catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))) {
-      require(catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(staging)),
-        s"neither '$table' nor its staging copy exists")
-      spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
-      return
-    }
-    val meta = catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$table' is not a bucketed store table")).numBuckets
-    spark.sql(s"DROP TABLE IF EXISTS `$staging`")
-    graft.sinks.Bucketing.writeBucketed(
+    val buckets = graft.sinks.Bucketing.spec(spark, table).numBuckets
+    graft.sinks.Bucketing.overwriteBucketedStaged(
       semanticStore(spark.table(table).select(col(idCol), col(embCol)),
         newCentroids, idCol, embCol, centroidIdCol),
-      staging, Seq("cluster"), buckets)
-    spark.sql(
-      s"ALTER TABLE `$staging` SET TBLPROPERTIES ('$CentroidsProp' = '$fp')")
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
+      table, Seq("cluster"), buckets, stamps = Map(CentroidsProp ->
+        centroidFingerprint(newCentroids, centroidIdCol, embCol)))
   }
 
   /** The commit step for the semantic store (the
@@ -266,16 +241,10 @@ object SemDedup {
                             centroidIdCol: String, table: String): Unit = {
     val spark = admitted.sparkSession
     requireCentroidsMatch(spark, table, centroids, centroidIdCol, embCol)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$table' is not a bucketed store table")).numBuckets
-    semanticStore(admitted, centroids, idCol, embCol, centroidIdCol)
-      .join(spark.table(table).select(col("cluster"), col(idCol)),
-        Seq("cluster", idCol), "left_anti")
-      .repartition(buckets, col("cluster"))
-      .write.mode("append").insertInto(table)
+    graft.sinks.Bucketing.append(
+      semanticStore(admitted, centroids, idCol, embCol, centroidIdCol)
+        .join(spark.table(table).select(col("cluster"), col(idCol)),
+          Seq("cluster", idCol), "left_anti"), table)
   }
 
   /** Prototypicality ranking (the SSL-Prototypes / D4 curation stage

@@ -252,23 +252,14 @@ object Similarity {
       knnGraph(corpus, idCol, embCol, k, b, tables, center),
       knnEdgesTable(table), Seq("q_id"), buckets)
     val geom = geomString(k, b, tables, center)
-    Seq(knnVectorsTable(table), knnEdgesTable(table)).foreach { t =>
-      spark.sql(
-        s"ALTER TABLE `$t` SET TBLPROPERTIES ('$KnnGeometryProp' = '$geom')")
-    }
+    Seq(knnVectorsTable(table), knnEdgesTable(table)).foreach(
+      graft.sinks.Bucketing.stamp(spark, _, KnnGeometryProp, geom))
   }
 
   private def storedGeometry(spark: org.apache.spark.sql.SparkSession,
                              table: String): (Int, Int, Int, Seq[Double]) = {
-    // A crash inside a staged rewrite's drop/rename window leaves only
-    // the finished staging copy; complete the rename here so every store
-    // entry point (append, open) converges on retry instead of throwing
-    // NoSuchTableException before reaching the rewrite path.
-    graft.sinks.Bucketing.completePendingSwap(spark, table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val raw = meta.properties.getOrElse(KnnGeometryProp,
-      throw new IllegalStateException(
+    val raw = graft.sinks.Bucketing.stamped(spark, table, KnnGeometryProp)
+      .getOrElse(throw new IllegalStateException(
         s"'$table' carries no $KnnGeometryProp stamp — not a k-NN store " +
           "table, or an interrupted write; rebuild via writeKnnStore"))
     val re = "k=(\\d+);bits=(\\d+);tables=(\\d+)(?:;center=([0-9a-f,]+))?".r
@@ -309,16 +300,9 @@ object Similarity {
       .localCheckpoint()
     val merged = knnGraphAppend(spark.table(et), oldVecs, fresh,
       idCol, embCol, k, bits, tables, center)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(et))
-      .bucketSpec.get.numBuckets
-    graft.sinks.Bucketing.overwriteBucketedStaged(
-      merged, et, Seq("q_id"), buckets)
-    val vBuckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(vt))
-      .bucketSpec.get.numBuckets
-    fresh.repartition(vBuckets, col(idCol))
-      .write.mode("append").insertInto(vt)
+    graft.sinks.Bucketing.overwriteBucketedStaged(merged, et, Seq("q_id"),
+      graft.sinks.Bucketing.spec(spark, et).numBuckets)
+    graft.sinks.Bucketing.append(fresh, vt)
   }
 
   /** Geometry MIGRATION for a persisted k-NN store — the
@@ -335,43 +319,28 @@ object Similarity {
     * and bucketing are geometry-independent and untouched.
     *
     * Crash discipline: the VECTORS stamp moves FIRST, so from the first
-    * committed step until the final edges re-stamp the two stamps
-    * diverge and every probe/append fails fast — a half-migrated store
-    * can never be read as either geometry. Any crash converges by
-    * re-running (interrupted edge swaps complete via the staging table;
-    * every step is idempotent). Cost is the honest full edge rebuild —
-    * run it as the deliberate maintenance step it is. */
+    * committed step until the edges swap in (stamped on their staging
+    * copy) the two stamps diverge and every probe/append fails fast — a
+    * half-migrated store can never be read as either geometry. Any crash
+    * converges by re-running (interrupted edge swaps complete via the
+    * staging table; every step is idempotent). Cost is the honest full
+    * edge rebuild — run it as the deliberate maintenance step it is. */
   def regeomKnnStore(spark: org.apache.spark.sql.SparkSession,
                      table: String, k: Int, bits: Int = AutoBits,
                      tables: Int = 2, center: Seq[Double] = Nil): Unit = {
     val vt = knnVectorsTable(table)
     val et = knnEdgesTable(table)
-    graft.sinks.Bucketing.completePendingSwap(spark, vt)
-    graft.sinks.Bucketing.completePendingSwap(spark, et)
-    val vecs = spark.table(vt)
-    // the store's column names come from its own schema: the embedding
-    // is the (single) array column, the id the other
-    val embCol = vecs.schema.fields
-      .find(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      .getOrElse(throw new IllegalStateException(
-        s"'$vt' has no array column — not a k-NN vectors table")).name
-    val idCol = vecs.schema.fields.find(_.name != embCol).get.name
+    val (vecs, idCol, embCol) = vectorsTable(spark, vt, "k-NN")
     // migration re-sizes from the CURRENT corpus, so the measuring
     // sentinel is legitimate here (unlike the geometry-replaying append)
     val b = resolveGeometry(vecs, idCol, embCol, bits, tables,
       center = center)
     val geom = geomString(k, b, tables, center)
-    spark.sql(
-      s"ALTER TABLE `$vt` SET TBLPROPERTIES ('$KnnGeometryProp' = '$geom')")
-    val etBuckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(et))
-      .bucketSpec.getOrElse(throw new IllegalArgumentException(
-        s"'$et' is not a bucketed store table")).numBuckets
+    graft.sinks.Bucketing.stamp(spark, vt, KnnGeometryProp, geom)
     graft.sinks.Bucketing.overwriteBucketedStaged(
       knnGraph(vecs, idCol, embCol, k, b, tables, center),
-      et, Seq("q_id"), etBuckets)
-    spark.sql(
-      s"ALTER TABLE `$et` SET TBLPROPERTIES ('$KnnGeometryProp' = '$geom')")
+      et, Seq("q_id"), graft.sinks.Bucketing.spec(spark, et).numBuckets,
+      stamps = Map(KnnGeometryProp -> geom))
   }
 
   /** Center-drift report for a CENTERED k-NN store — the operational
@@ -395,12 +364,7 @@ object Similarity {
       s"'$table' carries no center in its geometry stamp — " +
         "knnStoreCenterDrift monitors centered stores; plain stores " +
         "have no mean to drift from")
-    val vecs = spark.table(vt)
-    val embCol = vecs.schema.fields
-      .find(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      .getOrElse(throw new IllegalStateException(
-        s"'$vt' has no array column — not a k-NN vectors table")).name
-    val idCol = vecs.schema.fields.find(_.name != embCol).get.name
+    val (vecs, idCol, embCol) = vectorsTable(spark, vt, "k-NN")
     val current = corpusCenter(vecs, idCol, embCol, sampleK)
     require(current.length == stamped.length,
       s"stamped center has ${stamped.length} dims, store vectors " +
@@ -420,6 +384,20 @@ object Similarity {
     val geomV = storedGeometry(spark, knnVectorsTable(table))
     require(geomE == geomV, s"geometry stamps diverge on '$table'")
     spark.table(knnEdgesTable(table))
+  }
+
+  /** A persisted vectors table (k-NN or margin store) with its id and
+    * embedding column names, read from its own schema: the embedding is
+    * the (single) array column, the id the other. */
+  private def vectorsTable(spark: org.apache.spark.sql.SparkSession,
+                           vt: String, store: String): (DataFrame, String, String) = {
+    graft.sinks.Bucketing.spec(spark, vt) // finish an interrupted swap
+    val vecs = spark.table(vt)
+    val embCol = vecs.schema.fields
+      .find(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+      .getOrElse(throw new IllegalStateException(
+        s"'$vt' has no array column — not a $store vectors table")).name
+    (vecs, vecs.schema.fields.find(_.name != embCol).get.name, embCol)
   }
 
   // ---- persistent margin-mining (LSH) store ------------------------
@@ -460,19 +438,14 @@ object Similarity {
         .select(col("__id").as(idCol), col("__tbl"), col("__bucket")),
       marginSigsTable(table), Seq("__tbl", "__bucket"), buckets)
     val geom = lshGeomString(b, tables)
-    Seq(marginVectorsTable(table), marginSigsTable(table)).foreach { t =>
-      spark.sql(
-        s"ALTER TABLE `$t` SET TBLPROPERTIES ('$LshGeometryProp' = '$geom')")
-    }
+    Seq(marginVectorsTable(table), marginSigsTable(table)).foreach(
+      graft.sinks.Bucketing.stamp(spark, _, LshGeometryProp, geom))
   }
 
   private def storedLshGeometry(spark: org.apache.spark.sql.SparkSession,
                                 table: String): (Int, Int) = {
-    graft.sinks.Bucketing.completePendingSwap(spark, table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val raw = meta.properties.getOrElse(LshGeometryProp,
-      throw new IllegalStateException(
+    val raw = graft.sinks.Bucketing.stamped(spark, table, LshGeometryProp)
+      .getOrElse(throw new IllegalStateException(
         s"'$table' carries no $LshGeometryProp stamp — not a margin " +
           "store table, or an interrupted write; rebuild via " +
           "writeMarginStore"))
@@ -507,26 +480,16 @@ object Similarity {
     // marginMineStore discipline) — a batch whose idCol differs from the
     // write-time name must still anti-join against the right column
     // instead of dying in a raw AnalysisException
-    val vecs = spark.table(vt)
-    val vEmbCol = vecs.schema.fields
-      .find(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      .getOrElse(throw new IllegalStateException(
-        s"'$vt' has no array column — not a margin-store vectors table")).name
-    val vIdCol = vecs.schema.fields.find(_.name != vEmbCol).get.name
+    val (vecs, vIdCol, vEmbCol) = vectorsTable(spark, vt, "margin-store")
     val sIdCol = spark.table(st).schema.fields
       .find(f => f.name != "__tbl" && f.name != "__bucket").get.name
     val fresh = batch.select(col(idCol).as(vIdCol), col(embCol).as(vEmbCol))
-      .join(spark.table(vt).select(col(vIdCol)), Seq(vIdCol), "left_anti")
+      .join(vecs.select(col(vIdCol)), Seq(vIdCol), "left_anti")
       .localCheckpoint()
-    def bucketsOf(t: String) = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t)).bucketSpec.get.numBuckets
-    lshSigs(fresh, vIdCol, vEmbCol, bits, tables)
+    graft.sinks.Bucketing.append(lshSigs(fresh, vIdCol, vEmbCol, bits, tables)
       .select(col("__id").as(sIdCol), col("__tbl"), col("__bucket"))
-      .join(spark.table(st).select(col(sIdCol)), Seq(sIdCol), "left_anti")
-      .repartition(bucketsOf(st), col("__tbl"), col("__bucket"))
-      .write.mode("append").insertInto(st)
-    fresh.repartition(bucketsOf(vt), col(vIdCol))
-      .write.mode("append").insertInto(vt)
+      .join(spark.table(st).select(col(sIdCol)), Seq(sIdCol), "left_anti"), st)
+    graft.sinks.Bucketing.append(fresh, vt)
   }
 
   /** [[marginMineBucketed]] with the shipped side read from a persisted
@@ -561,12 +524,7 @@ object Similarity {
       .filter(col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("b_id"))
       .distinct()
-    val vecs = spark.table(vt)
-    val vEmbCol = vecs.schema.fields
-      .find(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      .getOrElse(throw new IllegalStateException(
-        s"'$vt' has no array column — not a margin-store vectors table")).name
-    val vIdCol = vecs.schema.fields.find(_.name != vEmbCol).get.name
+    val (vecs, vIdCol, vEmbCol) = vectorsTable(spark, vt, "margin-store")
     val scored = cand
       .join(vecs.select(col(vIdCol).as("a_id"), col(vEmbCol).as("__ea")),
         Seq("a_id"))

@@ -154,15 +154,9 @@ object Spans {
   def appendToSpanStore(admitted: DataFrame, textCol: String, table: String,
                         w: Int = 10): Unit = {
     val spark = admitted.sparkSession
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$table' is not a bucketed store table")).numBuckets
-    spanStore(admitted, textCol, w)
-      .join(spark.table(table), Seq("fp"), "left_anti")
-      .repartition(buckets, col("fp"))
-      .write.mode("append").insertInto(table)
+    graft.sinks.Bucketing.spec(spark, table) // finish a swap before the anti-join
+    graft.sinks.Bucketing.append(spanStore(admitted, textCol, w)
+      .join(spark.table(table), Seq("fp"), "left_anti"), table)
   }
 
   /** Incremental exact-substring dedup — [[removeDupSpans]] ACROSS

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -80,20 +79,12 @@ object Takedown {
 
   def tombstoneTable(table: String): String = table + "__tombstones"
 
-  private def bucketSpecOf(spark: SparkSession, table: String) = {
-    Bucketing.completePendingSwap(spark, table)
-    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$table' is not a bucketed store table"))
-  }
-
   /** Logical retraction: append `keys` (columns must be exactly the
     * store's bucket columns, in order) to the tombstone side-table,
     * created co-bucketed with the store on first use. O(takedown);
     * idempotent under re-delivery of the same keys. */
   def retract(spark: SparkSession, table: String, keys: DataFrame): Unit = {
-    val spec = bucketSpecOf(spark, table)
+    val spec = Bucketing.spec(spark, table)
     val bucketCols = spec.bucketColumnNames
     require(keys.columns.toSeq == bucketCols,
       s"Takedown.retract: keys columns ${keys.columns.mkString("(", ", ", ")")} " +
@@ -104,9 +95,8 @@ object Takedown {
     if (!spark.catalog.tableExists(tomb))
       Bucketing.writeBucketed(distinctKeys, tomb, bucketCols, spec.numBuckets)
     else
-      distinctKeys.join(spark.table(tomb), bucketCols, "left_anti")
-        .repartition(spec.numBuckets, bucketCols.map(col): _*)
-        .write.mode("append").insertInto(tomb)
+      Bucketing.append(
+        distinctKeys.join(spark.table(tomb), bucketCols, "left_anti"), tomb)
   }
 
   /** The store's LIVE view: rows minus tombstoned keys. With tombstones
@@ -114,7 +104,7 @@ object Takedown {
     * either side (spec-pinned); with none it is the table itself. Pass
     * this wherever a probe passed `spark.table(table)`. */
   def live(spark: SparkSession, table: String): DataFrame = {
-    val spec = bucketSpecOf(spark, table)
+    val spec = Bucketing.spec(spark, table)
     val tomb = tombstoneTable(table)
     if (!spark.catalog.tableExists(tomb)) spark.table(table)
     else spark.table(table)
@@ -126,7 +116,7 @@ object Takedown {
     * then drop the tombstone table. No-op without tombstones. Schedule
     * with compaction; see the object doc for the crash window. */
   def purge(spark: SparkSession, table: String): Unit = {
-    val spec = bucketSpecOf(spark, table)
+    val spec = Bucketing.spec(spark, table)
     val tomb = tombstoneTable(table)
     if (!spark.catalog.tableExists(tomb)) return
     val sortCols =
@@ -187,7 +177,7 @@ object Takedown {
                           ids: DataFrame): Unit = {
     val vt = Similarity.knnVectorsTable(table)
     val et = Similarity.knnEdgesTable(table)
-    val idCol = bucketSpecOf(spark, vt).bucketColumnNames.head
+    val idCol = Bucketing.spec(spark, vt).bucketColumnNames.head
     require(ids.columns.length == 1,
       s"Takedown.retractFromKnnStore: ids must be a single-column frame " +
         s"(got ${ids.columns.mkString(", ")})")
@@ -205,7 +195,7 @@ object Takedown {
   def liveKnnEdges(spark: SparkSession, table: String): DataFrame = {
     val vt = Similarity.knnVectorsTable(table)
     val et = Similarity.knnEdgesTable(table)
-    val idCol = bucketSpecOf(spark, vt).bucketColumnNames.head
+    val idCol = Bucketing.spec(spark, vt).bucketColumnNames.head
     val base = live(spark, et)
     val tombV = tombstoneTable(vt)
     if (!spark.catalog.tableExists(tombV)) base
@@ -224,7 +214,7 @@ object Takedown {
   def purgeKnnStore(spark: SparkSession, table: String): Unit = {
     val vt = Similarity.knnVectorsTable(table)
     val et = Similarity.knnEdgesTable(table)
-    val eSpec = bucketSpecOf(spark, et)
+    val eSpec = Bucketing.spec(spark, et)
     val tombE = tombstoneTable(et)
     val tombV = tombstoneTable(vt)
     if (spark.catalog.tableExists(tombE) ||

@@ -87,17 +87,14 @@ object Winnow {
                    k: Int = 4, w: Int = 4): Unit = {
     graft.sinks.Bucketing.writeBucketed(
       fpStore(corpus, textCol, idCol, k, w), table, Seq("fp"), buckets)
-    corpus.sparkSession.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-      s"('$WinnowGeometryProp' = '${geomString(k, w)}')")
+    graft.sinks.Bucketing.stamp(corpus.sparkSession, table,
+      WinnowGeometryProp, geomString(k, w))
   }
 
   private def storedGeometry(spark: org.apache.spark.sql.SparkSession,
                              table: String): (Int, Int) = {
-    graft.sinks.Bucketing.completePendingSwap(spark, table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val raw = meta.properties.getOrElse(WinnowGeometryProp,
-      throw new IllegalStateException(
+    val raw = graft.sinks.Bucketing.stamped(spark, table, WinnowGeometryProp)
+      .getOrElse(throw new IllegalStateException(
         s"'$table' carries no $WinnowGeometryProp stamp — not a winnow " +
           "store table, or an interrupted write; rebuild via writeFpStore"))
     val re = "k=(\\d+);w=(\\d+)".r
@@ -127,14 +124,8 @@ object Winnow {
                       table: String): Unit = {
     val spark = admitted.sparkSession
     val (k, w) = storedGeometry(spark, table)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.getOrElse(throw new IllegalArgumentException(
-        s"'$table' is not a bucketed store table")).numBuckets
-    fpStore(admitted, textCol, idCol, k, w)
-      .join(spark.table(table), Seq("fp"), "left_anti")
-      .repartition(buckets, col("fp"))
-      .write.mode("append").insertInto(table)
+    graft.sinks.Bucketing.append(fpStore(admitted, textCol, idCol, k, w)
+      .join(spark.table(table), Seq("fp"), "left_anti"), table)
   }
 
   /** Per-document partial-overlap probe against a persisted store —

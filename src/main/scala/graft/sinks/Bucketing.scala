@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions.col
 
 /** Bucketed table layout for co-located joins (SURVEY.md §7.0 scale
@@ -19,8 +20,55 @@ import org.apache.spark.sql.functions.col
   *
   * Buckets also bound file sizes (work with `maxRecordsPerFile`) and give
   * bucket pruning on equality filters over the bucket key.
+  *
+  * The persisted stores behind the incremental operators commit only
+  * through this object: [[spec]] (the recovering lookup every store entry
+  * point starts with), [[append]] (rows the caller anti-joined against
+  * the store, pre-partitioned on the table's own bucket spec), [[stamp]] /
+  * [[stamped]] (the `graft.*` property a store checks its callers
+  * against; each store keeps its own value format), and the staged
+  * rewrites, which carry `graft.*` properties and write new `stamps` onto
+  * the staging copy, so new contents never appear under an old stamp. A
+  * crash inside a swap's drop/rename window leaves only the staging copy;
+  * the next [[spec]], [[stamp]] or [[stamped]] finishes the rename.
   */
 object Bucketing {
+
+  /** The bucket spec of store `table`, after completing an interrupted
+    * staged swap ([[completePendingSwap]]); fails on an unbucketed table. */
+  def spec(spark: SparkSession, table: String): BucketSpec = {
+    completePendingSwap(spark, table)
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+      .bucketSpec.getOrElse(throw new IllegalArgumentException(
+        s"'$table' is not a bucketed store table"))
+  }
+
+  /** Appends `rows` to store `table`, pre-partitioned on the table's own
+    * bucket columns and count: repartition and bucketBy share one
+    * murmur3-pmod assignment, so each task writes one file per bucket.
+    * `rows` is what the caller's anti-join against the store admitted;
+    * call [[spec]] first when building it reads the table. */
+  def append(rows: DataFrame, table: String): Unit = {
+    val s = spec(rows.sparkSession, table)
+    rows.repartition(s.numBuckets, s.bucketColumnNames.map(col): _*)
+      .write.mode("append").insertInto(table)
+  }
+
+  /** Sets the `graft.*` property `key` of `table` to `value`, after
+    * completing an interrupted staged swap. */
+  def stamp(spark: SparkSession, table: String, key: String,
+            value: String): Unit = {
+    completePendingSwap(spark, table)
+    setProps(spark, table, Map(key -> value))
+  }
+
+  /** The `graft.*` property `key` of `table`, if stamped, after
+    * completing an interrupted staged swap. */
+  def stamped(spark: SparkSession, table: String, key: String): Option[String] = {
+    completePendingSwap(spark, table)
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+      .properties.get(key)
+  }
 
   /** Persist `df` as a bucketed+sorted managed table. `buckets` should be
     * sized so one bucket of the LARGEST co-bucketed table fits an
@@ -77,32 +125,23 @@ object Bucketing {
     * with no original is finished by rename; a fresh run starts by
     * dropping the stale staging copy). */
   def compactBucketed(spark: SparkSession, table: String): Unit = {
-    val catalog = spark.sessionState.catalog
     val staging = table + "__compacting"
-    if (!catalog.tableExists(TableIdentifier(table))) {
-      // crash recovery: a finished staging table whose swap never ran
-      require(catalog.tableExists(TableIdentifier(staging)),
-        s"neither '$table' nor its staging copy exists")
-      spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
-      return
-    }
-    val meta = catalog.getTableMetadata(TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"'$table' is not a bucketed store table"))
-    val bucketCols = spec.bucketColumnNames
+    if (finishSwap(spark, table, staging)) return
+    val s = spec(spark, table)
+    val bucketCols = s.bucketColumnNames
     val sortCols =
-      if (spec.sortColumnNames.nonEmpty) spec.sortColumnNames else bucketCols
+      if (s.sortColumnNames.nonEmpty) s.sortColumnNames else bucketCols
     spark.sql(s"DROP TABLE IF EXISTS `$staging`")
     val autoScanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val autoScanOld = spark.conf.get(autoScanKey)
     try {
       spark.conf.set(autoScanKey, "false")
       spark.table(table).write.mode(SaveMode.Overwrite)
-        .bucketBy(spec.numBuckets, bucketCols.head, bucketCols.tail: _*)
+        .bucketBy(s.numBuckets, bucketCols.head, bucketCols.tail: _*)
         .sortBy(sortCols.head, sortCols.tail: _*)
         .format("parquet").saveAsTable(staging)
     } finally spark.conf.set(autoScanKey, autoScanOld)
-    carryPropsAndSwap(spark, meta, staging, table)
+    carryPropsAndSwap(spark, staging, table)
   }
 
   /** Rewrites a bucketed store table into `newNumBuckets` buckets — the
@@ -134,22 +173,13 @@ object Bucketing {
                     newNumBuckets: Int): Unit = {
     require(newNumBuckets >= 1,
       s"newNumBuckets must be positive: $newNumBuckets")
-    val catalog = spark.sessionState.catalog
     val staging = table + "__rebucketing"
-    if (!catalog.tableExists(TableIdentifier(table))) {
-      // crash recovery: a finished staging table whose swap never ran
-      require(catalog.tableExists(TableIdentifier(staging)),
-        s"neither '$table' nor its staging copy exists")
-      spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
-      return
-    }
-    val meta = catalog.getTableMetadata(TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"'$table' is not a bucketed store table"))
-    if (spec.numBuckets == newNumBuckets) return compactBucketed(spark, table)
-    val bucketCols = spec.bucketColumnNames
+    if (finishSwap(spark, table, staging)) return
+    val s = spec(spark, table)
+    if (s.numBuckets == newNumBuckets) return compactBucketed(spark, table)
+    val bucketCols = s.bucketColumnNames
     val sortCols =
-      if (spec.sortColumnNames.nonEmpty) spec.sortColumnNames else bucketCols
+      if (s.sortColumnNames.nonEmpty) s.sortColumnNames else bucketCols
     spark.sql(s"DROP TABLE IF EXISTS `$staging`")
     spark.table(table)
       .repartition(newNumBuckets, bucketCols.map(col): _*)
@@ -157,7 +187,7 @@ object Bucketing {
       .bucketBy(newNumBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(sortCols.head, sortCols.tail: _*)
       .format("parquet").saveAsTable(staging)
-    carryPropsAndSwap(spark, meta, staging, table)
+    carryPropsAndSwap(spark, staging, table)
   }
 
   /** Staged + swapped full REWRITE of a bucketed store table with new
@@ -168,25 +198,23 @@ object Bucketing {
     * [[compactBucketed]]: the new contents are fully written to
     * `<table>__rewriting` before the drop/rename window, `graft.*`
     * properties carry over, and a rerun converges (a finished staging
-    * copy with no original is completed by rename). The contents frame
-    * may read FROM the table being rewritten — it materializes into the
-    * staging table while the original still exists. */
+    * copy with no original is completed by rename). `stamps` are
+    * written onto the staging copy over the carried properties, so the
+    * new contents appear with their new stamps in one swap (a remapped
+    * semantic store never shows its new clustering under the old
+    * centroid fingerprint). The contents frame may read FROM the table
+    * being rewritten — it materializes into the staging table while the
+    * original still exists. */
   def overwriteBucketedStaged(df: DataFrame, table: String,
                               bucketCols: Seq[String], buckets: Int,
-                              sortCols: Seq[String] = Nil): Unit = {
+                              sortCols: Seq[String] = Nil,
+                              stamps: Map[String, String] = Map.empty): Unit = {
     val spark = df.sparkSession
-    val catalog = spark.sessionState.catalog
     val staging = table + "__rewriting"
-    if (!catalog.tableExists(TableIdentifier(table))) {
-      require(catalog.tableExists(TableIdentifier(staging)),
-        s"neither '$table' nor its staging copy exists")
-      spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
-      return
-    }
-    val meta = catalog.getTableMetadata(TableIdentifier(table))
+    if (finishSwap(spark, table, staging)) return
     spark.sql(s"DROP TABLE IF EXISTS `$staging`")
     writeBucketed(df, staging, bucketCols, buckets, sortCols)
-    carryPropsAndSwap(spark, meta, staging, table)
+    carryPropsAndSwap(spark, staging, table, stamps)
   }
 
   /** Crash-recovery entry for readers: when `table` is missing but a
@@ -207,22 +235,41 @@ object Bucketing {
       .foreach(s => spark.sql(s"ALTER TABLE `$s` RENAME TO `$table`"))
   }
 
+  /** Shared head of the staged+swap rewrites: with `table` gone, a
+    * finished `staging` copy is renamed into place (true). */
+  private def finishSwap(spark: SparkSession, table: String,
+                         staging: String): Boolean = {
+    val catalog = spark.sessionState.catalog
+    if (catalog.tableExists(TableIdentifier(table))) return false
+    require(catalog.tableExists(TableIdentifier(staging)),
+      s"neither '$table' nor its staging copy exists")
+    spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
+    true
+  }
+
   /** Shared tail of the staged+swap rewrites: copy `graft.*` table
-    * properties (e.g. the semantic store's centroid fingerprint) onto
-    * the staging table, then drop-and-rename it into place. */
-  private def carryPropsAndSwap(
-      spark: SparkSession,
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-      staging: String, table: String): Unit = {
-    val props = meta.properties.filter { case (k, _) => k.startsWith("graft.") }
-    if (props.nonEmpty) {
-      val kv = props
-        .map { case (k, v) => s"'$k' = '${v.replace("'", "''")}'" }
-        .mkString(", ")
-      spark.sql(s"ALTER TABLE `$staging` SET TBLPROPERTIES ($kv)")
-    }
+    * properties (e.g. the semantic store's centroid fingerprint) and
+    * then `stamps` onto the staging table, then drop-and-rename it into
+    * place. */
+  private def carryPropsAndSwap(spark: SparkSession, staging: String,
+                                table: String,
+                                stamps: Map[String, String] = Map.empty): Unit = {
+    val carried = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(table)).properties
+      .filter { case (k, _) => k.startsWith("graft.") }
+    setProps(spark, staging, carried ++ stamps)
     spark.sql(s"DROP TABLE `$table`")
     spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
+  }
+
+  private def setProps(spark: SparkSession, table: String,
+                       props: Map[String, String]): Unit = if (props.nonEmpty) {
+    props.keys.foreach(k => require(k.startsWith("graft."),
+      s"store stamps are graft.* properties (compaction carries only those): $k"))
+    val kv = props
+      .map { case (k, v) => s"'$k' = '${v.replace("'", "''")}'" }
+      .mkString(", ")
+    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES ($kv)")
   }
 
   /** Per-bucket (bucket, files, bytes) of a bucketed managed table —

@@ -116,14 +116,16 @@ object Sink {
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
     val root = new Path(dir)
     val fs = root.getFileSystem(hconf)
-    val it = fs.listFiles(root, true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) out += f.getPath.toString
+    // listStatus, not listFiles: listFiles copies each status into a
+    // LocatedFileStatus, whose permission Hadoop's local filesystem
+    // loads by forking `ls -ld` when libhadoop is absent
+    def walk(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if (s.isDirectory) walk(s.getPath)
+      else if (!n.startsWith("_") && !n.startsWith(".")) Seq(s.getPath.toString)
+      else Nil
     }
-    out.result().sorted
+    walk(root).sorted
   }
 
   /** Writer options (K1 row cap, K4 codec, csv header), the same for a

@@ -258,7 +258,7 @@ class SemDedupSpec extends SparkSpec {
     } finally {
       spark.sql("DROP TABLE IF EXISTS sem_store_remap")
       spark.sql("DROP TABLE IF EXISTS sem_store_scratch")
-      spark.sql("DROP TABLE IF EXISTS sem_store_remap__remapping")
+      spark.sql("DROP TABLE IF EXISTS sem_store_remap__rewriting")
     }
   }
 

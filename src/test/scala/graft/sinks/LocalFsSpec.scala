@@ -88,6 +88,22 @@ class LocalFsSpec extends SparkSpec {
       .head() == 3999L * 4000 / 2)
   }
 
+  test("a partitioned write starts no process and lists its files sorted") {
+    val out = Files.createTempDirectory("graft_localfs_part").resolve("t")
+    val df = spark.range(0, 400, 1, 2).selectExpr("id", "id % 4 as k")
+    var files: Seq[String] = Nil
+    val forks = processStarts {
+      files = Sink.write(df, out.toString, "t", Sink.Config(partitionBy = Seq("k")))
+    }
+    assert(forks.isEmpty, s"started: $forks")
+    assert(files.length == 8 && files == files.sorted) // 2 tasks x 4 keys
+    val onDisk = Files.walk(out).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("_") &&
+        !p.getFileName.toString.startsWith("."))
+      .toSet
+    assert(files.map(localPath).toSet == onDisk)
+  }
+
   test("a one-batch StreamDump with a checkpoint starts no process") {
     val src = Files.createTempDirectory("graft_localfs_src").toString
     val out = Files.createTempDirectory("graft_localfs_out").toString
