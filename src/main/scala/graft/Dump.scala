@@ -9,10 +9,12 @@ import graft.sinks.Sink
   *
   *   runMain graft.Dump <index-pattern> --src <dir> --out <dir>
   *     [--es URL [--size N] [--scroll 1h] [--timeout SEC] [--slices N]
+  *      [--mode scroll|pit] [--retries N] [--retry-backoff-ms MS]
   *      [--cert F] [--key F] [--capath F] [--no-verify-certs]]
   *     [--query EXPR] [--fields a,b*,c] [--sort field:asc,...]
-  *     [--output parquet|ndjson|csv|jsonl] [--compression gzip|zstd|uncompressed]
-  *     [--flatten] [--max-partition-rows N] [--no-partition] [--quiet]
+  *     [--output parquet|ndjson|csv|jsonl|stdout] [--compression gzip|zstd|uncompressed]
+  *     [--flatten] [--max-partition-rows N] [--max-partition-mb N]
+  *     [--no-partition] [--partition-by a,b] [--quiet] [--debug]
   *
   * Two source modes. `--es URL` is the reference's own mode
   * (dump-es-parquet:372-382): the live-cluster catalog resolves the index
@@ -133,20 +135,31 @@ object Dump {
     results
   }
 
-  /** Minimal GNU-ish flag parser: `--name value`, `--bool-flag`, free args. */
-  private val boolFlags =
-    Set("flatten", "no-partition", "quiet", "debug", "no-verify-certs")
+  /** Every flag `execute` reads, and whether it takes a value. */
+  private val takesValue: Map[String, Boolean] =
+    (Seq("src", "out", "output", "es", "timeout", "cert", "key", "capath",
+      "size", "scroll", "slices", "sort", "query", "mode", "retries",
+      "retry-backoff-ms", "fields", "max-partition-mb", "max-partition-rows",
+      "compression", "partition-by").map(_ -> true) ++
+      Seq("flatten", "no-partition", "quiet", "debug", "no-verify-certs")
+        .map(_ -> false)).toMap
 
+  /** Minimal GNU-ish flag parser: `--name value`, `--bool-flag`, free
+    * args. An unknown `--name` fails rather than swallowing the next
+    * argument as its value. */
   def parse(args: List[String], flags: Map[String, String] = Map.empty,
             positional: List[String] = Nil): (Map[String, String], List[String]) =
     args match {
       case Nil => (flags, positional.reverse)
       case flag :: rest if flag.startsWith("--") =>
         val name = flag.drop(2)
-        if (boolFlags(name)) parse(rest, flags + (name -> "true"), positional)
-        else rest match {
-          case v :: more => parse(more, flags + (name -> v), positional)
-          case Nil => throw new IllegalArgumentException(s"missing value for --$name")
+        takesValue.get(name) match {
+          case Some(false) => parse(rest, flags + (name -> "true"), positional)
+          case Some(true) => rest match {
+            case v :: more => parse(more, flags + (name -> v), positional)
+            case Nil => throw new IllegalArgumentException(s"missing value for --$name")
+          }
+          case None => throw new IllegalArgumentException(s"unknown flag --$name")
         }
       case p :: rest => parse(rest, flags, p :: positional)
     }

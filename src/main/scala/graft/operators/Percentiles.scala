@@ -109,7 +109,9 @@ object Percentiles {
     * grouped or continuous data, where a histogram would itself be
     * corpus-sized); THIS is the right global form when
     * distinct values ≪ rows. Nulls ignored; all-null input yields one
-    * row of null quantiles. */
+    * row of null quantiles. Runs Spark jobs when the frame is built,
+    * not when it is consumed: the global [[Prefix.cumsum]] path's
+    * `driverPrefix` collects the histogram's subtotals and its total. */
   def quantileContHist(df: DataFrame, valueCol: String,
                        ps: Seq[(String, Double)]): DataFrame = {
     require(ps.nonEmpty, "need at least one percentile")
@@ -145,7 +147,9 @@ object Percentiles {
     * results as the sort path and the built-in (PercentilesSpec).
     * (The streaming member is [[graft.functions.QuantileSketch]];
     * grouped exact quantiles stay on [[quantileCont]], whose window
-    * partitions by the group key.) */
+    * partitions by the group key.) Runs Spark jobs when the frame is
+    * built, not when it is consumed: the global [[Prefix.cumsum]]
+    * path's `driverPrefix` collects the subtotals and the row count. */
   def quantileContScan(df: DataFrame, valueCol: String,
                        ps: Seq[(String, Double)]): DataFrame = {
     require(ps.nonEmpty, "need at least one percentile")

@@ -52,7 +52,14 @@ object Prefix {
   /** Adds `outCol` = running sum of `valueCol` in ascending `orderCol`
     * order (inclusive of the current row). Ties in `orderCol` are broken
     * arbitrarily but consistently within the run; use a unique order
-    * column for fully deterministic output. */
+    * column for fully deterministic output.
+    *
+    * This global form runs Spark jobs when the frame is BUILT, not when
+    * it is consumed: [[driverPrefix]] collects the per-partition
+    * subtotals, which samples the range bounds, shuffles `df` by range
+    * and materializes the pinned layout. An `explain`, or a frame that
+    * is never consumed, still pays for that. [[cumsumByGroup]] stays
+    * lazy. */
   def cumsum(df: DataFrame, orderCol: String, valueCol: String,
              outCol: String): DataFrame =
     cumsumByGroup(df, Nil, orderCol, valueCol, outCol)
@@ -304,7 +311,10 @@ object Prefix {
   /** Sequence packing: assign each row the shard in which its token run
     * STARTS, cutting shards at `budget` tokens — greedy first-fit in
     * `orderCol` order, the standard pre-tokenization shard layout for
-    * training data. shard = floor(exclusive_prefix / budget). */
+    * training data. shard = floor(exclusive_prefix / budget).
+    *
+    * Built on the global [[cumsum]], so it runs Spark jobs when the
+    * frame is built: [[driverPrefix]] collects the subtotals. */
   def packIntoShards(df: DataFrame, orderCol: String, tokenCol: String,
                      budget: Long, shardCol: String = "shard"): DataFrame =
     cumsum(df, orderCol, tokenCol, "__cum")

@@ -292,9 +292,9 @@ object Layout {
     * unsigned-byte-ordered (UTF-8 binary); JVM `String` comparison is
     * UTF-16-code-unit-ordered — the two agree on every BMP code point
     * and disagree only past it, so bounds CONTAINING SURROGATES are
-    * treated as absent (file kept), never compared wrongly. Same
-    * superset guarantee as the numeric form: callers re-apply the
-    * predicate. */
+    * treated as absent (file kept), never compared wrongly, and a
+    * query bound containing one keeps every file. Same superset
+    * guarantee as the numeric form: callers re-apply the predicate. */
   def pruneFilesStr(manifest: DataFrame, column: String,
                     lo: String, hi: String): Seq[String] = {
     val all = manifest.select(col("file")).distinct()
@@ -307,14 +307,16 @@ object Layout {
     // rows are driver-sized metadata (one per file), same as the final
     // file list.
     def bmp(s: String) = !s.exists(Character.isSurrogate)
-    val excluded = manifest
-      .where(col("column") === column &&
-        col("min_str").isNotNull && col("max_str").isNotNull)
-      .select(col("file"), col("min_str"), col("max_str"))
-      .collect()
-      .filter(r => bmp(r.getString(1)) && bmp(r.getString(2)) &&
-        (r.getString(2) < lo || r.getString(1) > hi))
-      .map(_.getString(0)).toSet
+    val excluded =
+      if (!bmp(lo) || !bmp(hi)) Set.empty[String]
+      else manifest
+        .where(col("column") === column &&
+          col("min_str").isNotNull && col("max_str").isNotNull)
+        .select(col("file"), col("min_str"), col("max_str"))
+        .collect()
+        .filter(r => bmp(r.getString(1)) && bmp(r.getString(2)) &&
+          (r.getString(2) < lo || r.getString(1) > hi))
+        .map(_.getString(0)).toSet
     all.filterNot(excluded).toSeq.sorted
   }
 

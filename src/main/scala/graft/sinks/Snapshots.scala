@@ -1,5 +1,7 @@
 package graft.sinks
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -230,68 +232,120 @@ object Snapshots {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  /** Parse one log entry. Hand-rolled JSON (the library's Verify.scala
-    * discipline — no json dep): version/op/files are uuid-safe tokens
-    * we wrote ourselves and appear BEFORE the schema blob, so first-
-    * occurrence scans are unambiguous; the schema rides as a trailing
-    * `"schema":{...}` object handed to [[DataType.fromJson]]. A
-    * `"kind":"delta"` marker before `"op"` makes the entry a
-    * [[DeltaEntry]]: its files/sizes/stats arrays are the ADDED files
-    * and a `"remove":[...]` array (rendered before the schema) names
-    * the dropped ones; without the marker the entry is full-state
-    * ([[FullEntry]] — every pre-r18 entry, every checkpoint). */
-  private def parseEntry(s: String): RawEntry = {
-    def field(name: String): String = {
-      val i = s.indexOf("\"" + name + "\"")
-      require(i >= 0, s"snapshot log entry missing '$name': $s")
-      s.drop(i + name.length + 2)
+  // ---------------------------------------------------------------- codec
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Read one log entry, every field by name. A `"kind":"delta"` entry
+    * is a [[DeltaEntry]]: its files/sizes/stats arrays are the ADDED
+    * files and `remove` names the dropped ones; without the marker the
+    * entry is full-state ([[FullEntry]] — every pre-r18 entry, every
+    * checkpoint). `sizes` whose count differs from `files` read as
+    * None, and a malformed `stats` block reads as no stats (pruning
+    * then keeps every file), never as a wrong bound. */
+  private def parseEntry(bytes: Array[Byte]): RawEntry = {
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.JsonNode
+    def bad(n: JsonNode): Nothing =
+      throw new IllegalArgumentException(s"snapshot log entry: unexpected $n")
+    def items(n: JsonNode) = if (n.isArray) n.elements.asScala.toSeq else bad(n)
+    def text(n: JsonNode) = if (n.isTextual) n.textValue else bad(n)
+    def long(n: JsonNode) =
+      if (n.isIntegralNumber && n.canConvertToLong) n.longValue else bad(n)
+    def pair[T](n: JsonNode)(f: JsonNode => T): (T, T) = items(n) match {
+      case Seq(lo, hi) => (f(lo), f(hi))
+      case _ => bad(n)
     }
-    val v = field("version").dropWhile(c => c == ':' || c == ' ')
-      .takeWhile(_.isDigit).toInt
-    val op = field("op").dropWhile(c => c == ':' || c == ' ' || c == '"')
-      .takeWhile(_ != '"')
-    val arr = field("files")
-    val body = arr.slice(arr.indexOf('[') + 1, arr.indexOf(']'))
-    val files = body.split(',').map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
-    val sizes = {
-      // ours (if present) sits between files and schema; a schema
-      // COLUMN named "sizes" appears later and fails the numeric/count
-      // guards below rather than corrupting the entry
-      val i = s.indexOf("\"sizes\"")
-      if (i < 0) None
-      else scala.util.Try {
-        val arr = s.drop(i + 8)
-        val b = arr.slice(arr.indexOf('[') + 1, arr.indexOf(']'))
-        b.split(',').map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-      }.toOption.filter(_.size == files.size)
+    // "#" = the file's row count (not a legal column name — the
+    // statColumns eligibility rule keeps the namespaces disjoint)
+    def fileStats(n: JsonNode): FileStats = {
+      if (!n.isObject) bad(n)
+      val kv = n.properties.asScala.map(p => p.getKey -> p.getValue).toMap
+      FileStats(kv.get("#").map(long).getOrElse(-1L), (kv - "#").map {
+        case (c, k) =>
+          val nulls = Option(k.get("z")).map(long)
+          c -> (if (k.has("n")) {
+            val (lo, hi) = pair(k.get("n"))(x =>
+              if (x.isNumber) x.doubleValue else bad(x))
+            NumStat(lo, hi, nulls)
+          } else if (k.has("s")) {
+            val (lo, hi) = pair(k.get("s"))(x =>
+              new String(java.util.Base64.getDecoder.decode(text(x)), UTF_8))
+            StrStat(lo, hi, nulls)
+          } else NullStat(nulls.getOrElse(bad(k))))
+      })
     }
-    val schema = {
-      val i = s.indexOf("\"schema\":")
-      if (i < 0) None
-      else DataType.fromJson(s.substring(i + 9, s.lastIndexOf('}')))
-        match {
-          case st: StructType => Some(st)
-          case other => throw new IllegalArgumentException(
-            s"snapshot log entry schema is not a struct: $other")
+    val e = Json.readTree(bytes)
+    if (e == null || !e.isObject) bad(e)
+    def field(name: String): JsonNode = Option(e.get(name)).getOrElse(
+      throw new IllegalArgumentException(s"snapshot log entry missing '$name'"))
+    val files = items(field("files")).map(text)
+    def optional[T](name: String)(f: JsonNode => Seq[T]): Option[Seq[T]] =
+      Option(e.get(name)).flatMap(n => scala.util.Try(f(n)).toOption)
+        .filter(_.size == files.size)
+    val schema = Option(e.get("schema")).map(n =>
+      DataType.fromJson(n.toString) match {
+        case st: StructType => st
+        case other => throw new IllegalArgumentException(
+          s"snapshot log entry schema is not a struct: $other")
+      })
+    val snap = Snapshot(Math.toIntExact(long(field("version"))),
+      text(field("op")), files, schema,
+      optional("sizes")(items(_).map(long)),
+      optional("stats")(items(_).map(fileStats)))
+    if (e.path("kind").asText == "delta")
+      DeltaEntry(snap.version, snap.op, snap.dataFiles,
+        items(field("remove")).map(text), schema)
+    else FullEntry(snap)
+  }
+
+  /** Write one log entry — commit deltas (`remove` given) and
+    * full-state checkpoints alike, fields in the order the log has
+    * always used: version, kind, op, files, sizes, stats, remove,
+    * schema. `sizes` is all-or-nothing (written only when every file's
+    * size is known), `stats` is written when any file has some, one
+    * object per file; numbers print as `Double.toString`, string bounds
+    * as base64 of their UTF-8 bytes, and the schema as Spark's own
+    * JSON. */
+  private[graft] def renderEntry(version: Int, op: String,
+                                 files: Seq[DataFile],
+                                 remove: Option[Seq[String]],
+                                 schema: Option[StructType]): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val g = Json.getFactory.createGenerator(buf)
+    def array[T](name: String, xs: Seq[T])(f: T => Unit): Unit = {
+      g.writeArrayFieldStart(name); xs.foreach(f); g.writeEndArray()
+    }
+    g.writeStartObject()
+    g.writeNumberField("version", version)
+    if (remove.isDefined) g.writeStringField("kind", "delta")
+    g.writeStringField("op", op)
+    array("files", files)(f => g.writeString(f.name))
+    if (files.nonEmpty && files.forall(_.size >= 0))
+      array("sizes", files)(f => g.writeNumber(f.size))
+    if (files.exists(!_.stats.isEmpty)) array("stats", files) { f =>
+      g.writeStartObject()
+      if (f.stats.rows >= 0) g.writeNumberField("#", f.stats.rows)
+      f.stats.cols.toSeq.sortBy(_._1).foreach { case (c, st) =>
+        g.writeObjectFieldStart(c)
+        st match {
+          case NumStat(lo, hi, _) =>
+            array("n", Seq(lo, hi))(g.writeNumber(_: Double))
+          case StrStat(lo, hi, _) =>
+            array("s", Seq(lo, hi))(x => g.writeString(
+              java.util.Base64.getEncoder.encodeToString(x.getBytes(UTF_8))))
+          case NullStat(_) =>
         }
+        st.nulls.foreach(g.writeNumberField("z", _))
+        g.writeEndObject()
+      }
+      g.writeEndObject()
     }
-    val core = Snapshot(v, op, files, schema, sizes,
-      parseStatsBlock(s, files.size))
-    val kindIdx = s.indexOf("\"kind\":\"delta\"")
-    if (kindIdx >= 0 && kindIdx < s.indexOf("\"op\"")) {
-      // the delta's removed names: rendered between stats and schema,
-      // so the first occurrence is ours (a schema field named 'remove'
-      // renders as "name":"remove", never as a "remove":[ key)
-      val i = s.indexOf("\"remove\":[")
-      require(i >= 0, s"delta log entry missing 'remove': $s")
-      val rArr = s.drop(i + 9)
-      val rBody = rArr.slice(rArr.indexOf('[') + 1, rArr.indexOf(']'))
-      val remove = rBody.split(',')
-        .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq
-      DeltaEntry(v, op, core.dataFiles, remove, schema)
-    } else FullEntry(core)
+    remove.foreach(array("remove", _)(g.writeString(_: String)))
+    schema.foreach { st => g.writeFieldName("schema"); g.writeRawValue(st.json) }
+    g.writeEndObject()
+    g.close()
+    buf.toByteArray
   }
 
   /** Apply one delta on top of a base file list. */
@@ -301,125 +355,14 @@ object Snapshots {
   }
 
   /** A [[Snapshot]] from a reconstructed file list — same
-    * all-or-nothing sizes rule and per-file-optional stats rule the
-    * commit render uses. */
+    * all-or-nothing sizes rule and per-file-optional stats rule
+    * [[renderEntry]] uses. */
   private def snapFrom(version: Int, op: String, dfs: Seq[DataFile],
                        schema: Option[StructType]): Snapshot = {
     val sorted = dfs.sortBy(_.name)
     Snapshot(version, op, sorted.map(_.name), schema,
       Option(sorted.map(_.size)).filter(sz => sz.nonEmpty && sz.forall(_ >= 0)),
       Option(sorted.map(_.stats)).filter(_.exists(!_.isEmpty)))
-  }
-
-  /** Locate and parse the entry's `"stats":[...]` block: one object
-    * per file, aligned with `files`. Defensive like the sizes parse —
-    * the literal `"stats":[` can in principle also appear inside the
-    * trailing schema json (a field's metadata map), so the parse
-    * validates shape (balanced region, object per file, exact file
-    * count, known stat kinds) and an invalid block degrades to None
-    * (no bounds logged → pruning keeps every file), never to a wrong
-    * bound. */
-  private def parseStatsBlock(s: String,
-                              nFiles: Int): Option[Seq[FileStats]] = {
-    val i = s.indexOf("\"stats\":[")
-    if (i < 0) None
-    else scala.util.Try {
-      val start = i + 8 // at '['
-      var depth = 0
-      var j = start
-      var inStr = false
-      var end = -1
-      while (end < 0 && j < s.length) {
-        val c = s.charAt(j)
-        if (inStr) { if (c == '"') inStr = false }
-        else c match {
-          case '"' => inStr = true
-          case '[' | '{' => depth += 1
-          case ']' | '}' =>
-            depth -= 1; if (depth == 0) end = j
-          case _ =>
-        }
-        j += 1
-      }
-      require(end > start, "unbalanced stats block")
-      val parsed = JsonLite.parse(s.substring(start, end + 1))
-      val arr = parsed.asInstanceOf[Seq[Any]]
-      require(arr.size == nFiles, s"stats count ${arr.size} != $nFiles files")
-      arr.map { o =>
-        val m = o.asInstanceOf[Map[String, Any]]
-        // "#" = the file's row count (not a legal column name — the
-        // token-safe eligibility rule keeps the namespaces disjoint)
-        val rows = m.get("#").map(_.asInstanceOf[Double].toLong).getOrElse(-1L)
-        val cols = (m - "#").map { case (colName, v) =>
-          val kinds = v.asInstanceOf[Map[String, Any]]
-          val nulls = kinds.get("z").map(_.asInstanceOf[Double].toLong)
-          val stat: ColStat =
-            if (kinds.contains("n")) {
-              val Seq(lo, hi) = kinds("n").asInstanceOf[Seq[Any]]
-                .map(_.asInstanceOf[Double])
-              NumStat(lo, hi, nulls)
-            } else if (kinds.contains("s")) {
-              val Seq(lo, hi) = kinds("s").asInstanceOf[Seq[Any]]
-                .map(x => new String(
-                  java.util.Base64.getDecoder.decode(x.asInstanceOf[String]),
-                  java.nio.charset.StandardCharsets.UTF_8))
-              StrStat(lo, hi, nulls)
-            } else NullStat(nulls.getOrElse(
-              throw new IllegalArgumentException("empty stat object")))
-          colName -> stat
-        }
-        FileStats(rows, cols)
-      }
-    }.toOption
-  }
-
-  private def renderStat(st: ColStat): String = {
-    def z = st.nulls.map(n => s""","z":$n""").getOrElse("")
-    st match {
-      case NumStat(lo, hi, _) => s"""{"n":[$lo,$hi]$z}"""
-      case StrStat(lo, hi, _) =>
-        def b64(x: String) = java.util.Base64.getEncoder.encodeToString(
-          x.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        s"""{"s":["${b64(lo)}","${b64(hi)}"]$z}"""
-      case NullStat(n) => s"""{"z":$n}"""
-    }
-  }
-
-  private def renderFileStats(fs: FileStats): String = {
-    val rows = if (fs.rows >= 0) Seq(s""""#":${fs.rows}""") else Seq.empty
-    val cols = fs.cols.toSeq.sortBy(_._1).map { case (c, v) =>
-      s""""$c":${renderStat(v)}"""
-    }
-    (rows ++ cols).mkString("{", ",", "}")
-  }
-
-  private def render(s: Snapshot): String =
-    s"""{"version":${s.version},"op":"${s.op}","files":[""" +
-      s.files.map(f => "\"" + f + "\"").mkString(",") + "]" +
-      s.sizes.map(sz => s""","sizes":[${sz.mkString(",")}]""").getOrElse("") +
-      s.stats.map(st => s""","stats":[""" +
-        st.map(renderFileStats).mkString(",") + "]").getOrElse("") +
-      s.schema.map(st => s""","schema":${st.json}""").getOrElse("") + "}"
-
-  /** Render a DELTA commit entry: the added files (with their sizes
-    * and stats, same machinery as the full form), the removed names,
-    * and the merged table schema. O(batch) bytes — the whole point of
-    * the r18 log shape. */
-  private def renderDelta(version: Int, op: String, add: Seq[DataFile],
-                          remove: Seq[String],
-                          schema: Option[StructType]): String = {
-    val sorted = add.sortBy(_.name)
-    val sizes = Option(sorted.map(_.size))
-      .filter(sz => sz.nonEmpty && sz.forall(_ >= 0))
-    val stats = Option(sorted.map(_.stats)).filter(_.exists(!_.isEmpty))
-    s"""{"version":$version,"kind":"delta","op":"$op","files":[""" +
-      sorted.map(f => "\"" + f.name + "\"").mkString(",") + "]" +
-      sizes.map(sz => s""","sizes":[${sz.mkString(",")}]""").getOrElse("") +
-      stats.map(st => s""","stats":[""" +
-        st.map(renderFileStats).mkString(",") + "]").getOrElse("") +
-      s""","remove":[""" +
-      remove.sorted.map(f => "\"" + f + "\"").mkString(",") + "]" +
-      schema.map(st => s""","schema":${st.json}""").getOrElse("") + "}"
   }
 
   private val CkptRe = "v(\\d{5})\\.ckpt\\.json".r
@@ -449,8 +392,7 @@ object Snapshots {
 
   private def readRaw(fs: FileSystem, p: Path): RawEntry = {
     val in = fs.open(p)
-    try parseEntry(new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8))
+    try parseEntry(in.readAllBytes())
     finally in.close()
   }
 
@@ -831,8 +773,8 @@ object Snapshots {
       s".tmp-ckpt-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       val out = fs.create(tmp, false)
-      try out.write(render(snap)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(renderEntry(snap.version, snap.op, snap.dataFiles, None,
+        snap.schema))
       finally out.close()
       publisherFor(spark, fs).publishExclusive(fs, tmp, ckptPath(log, snap.version))
       ()
@@ -879,11 +821,12 @@ object Snapshots {
           (fl, sch, fl.filterNot(f => prevNames(f.name)),
             prev.map(_.name).filterNot(flNames))
       }
-      // entry JSON hardening: landed names are uuid-safe by
-      // construction, but importDir adopts ARBITRARY names — a quote,
-      // comma, bracket, or control char would corrupt the hand-rolled
-      // entry format, so such names are refused at the door (rename
-      // before adopting), never half-written
+      // landed names are uuid-safe by construction, but importDir
+      // adopts ARBITRARY names: a quote, comma, bracket, or control
+      // char is refused at the door (rename before adopting) — the
+      // codec would escape it, but readers of earlier releases split
+      // the file list on exactly these characters, so a log that
+      // carried one would misread there
       files.map(_.name).find(f => f.exists(c => c < ' ' || "\",[]".contains(c)))
         .foreach(f => throw new IllegalArgumentException(
           s"snapshot commit to $dir: file name not representable in the " +
@@ -892,8 +835,8 @@ object Snapshots {
       val tmp = new Path(log,
         s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
       val out = fs.create(tmp, false)
-      try out.write(renderDelta(v, op, add, remove, schema)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(renderEntry(v, op, add.sortBy(_.name), Some(remove.sorted),
+        schema))
       finally out.close()
       val dest = entryPath(log, v)
       racePoint(attempt)
@@ -989,8 +932,9 @@ object Snapshots {
     * (`spark.graft.snapshots.statsColumns`, comma-separated; empty
     * string disables stats entirely), else the first [[StatsColsCap]]
     * top-level numeric/string columns. Eligibility is structural:
-    * token-safe ASCII names only (the hand-rolled entry format's
-    * terms), no collision with the entry's own field names, no
+    * token-safe ASCII names only, no collision with the entry's own
+    * field names (readers of earlier releases locate those fields by
+    * their first quoted occurrence in the entry text), no
     * timestamps/dates (their footer stats are in physical units —
     * micros/days — while the key-range prune compares logical casts;
     * refusing them is how a unit mismatch never mis-prunes). */
@@ -1072,10 +1016,9 @@ object Snapshots {
             if (!r.isNullAt(3) && !r.isNullAt(4)) {
               val (lo, hi) = (r.getDouble(3), r.getDouble(4))
               // NaN: parquet's documented unreliable-stats case;
-              // Infinity: a bare Infinity token would make the whole
-              // stats block unparseable JSON — both degrade to a
-              // bound-less null count, never a wrong (or poisonous)
-              // bound
+              // Infinity: JSON has no number for it, so the entry could
+              // not log it as a bound — both degrade to a bound-less
+              // null count, never a wrong (or poisonous) bound
               if (lo.isNaN || hi.isNaN || lo.isInfinite || hi.isInfinite)
                 nulls.map(NullStat(_))
               else Some(NumStat(lo, hi, nulls))

@@ -2,9 +2,10 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 import graft.Bench.noop
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.mutable
 
 /** Dev tool: run registered queries one way at a time.
@@ -70,6 +71,18 @@ object Prof {
   }
 
   private def jobs(spark: SparkSession, name: String, df: => DataFrame): Unit = {
+    val (total, rows) = stages(spark, name, df)
+    println(f"== $name total $total%.2f s, ${rows.size} stages, " +
+      f"stage-wall-sum ${rows.map(_._1).sum}%.2f s ==")
+    rows.zipWithIndex.foreach { case ((sec, site), i) =>
+      if (sec >= 0.05) println(f"  st$i%-3d $sec%7.3f s  $site")
+    }
+  }
+
+  /** One unmeasured run of `df` (codegen), then one measured run: its
+    * seconds and one (wall seconds, line) row per completed stage. */
+  private[tools] def stages(spark: SparkSession, name: String,
+                            df: => DataFrame): (Double, Seq[(Double, String)]) = {
     noop(df)
     val sc = spark.sparkContext
     // The listener bus delivers events asynchronously but in order, so the
@@ -87,24 +100,35 @@ object Prof {
       finally sc.removeSparkListener(rec)
     if (!drained) Console.err.println(s"WARNING $name: a job's end was not " +
       "delivered within 30 s; the stage list below is incomplete")
-    val rows = rec.rows
-    println(f"== $name total $total%.2f s, ${rows.size} stages, " +
-      f"stage-wall-sum ${rows.map(_._1).sum}%.2f s ==")
-    rows.zipWithIndex.foreach { case ((sec, site), i) =>
-      if (sec >= 0.05) println(f"  st$i%-3d $sec%7.3f s  $site")
-    }
+    (total, rec.rows)
   }
+
+  /** The first `graft.` frame of a call site's stack, outside this tool. */
+  private def graftFrame(stack: String): Option[String] =
+    stack.linesIterator
+      .find(l => l.contains("graft.") && !l.contains("graft.tools.Prof"))
+      .map(_.trim)
 
   /** One line per completed stage of the jobs started between the first
     * two fence jobs: wall time, IO, CPU, the job's call site and the first
-    * `graft.` frame. */
+    * `graft.` frame — the stage's own, else its SQL execution's (jobs
+    * that broadcast and subquery threads submit carry only a
+    * `CompletableFuture` call site). */
   private final class JobRecorder extends SparkListener {
     private var fences = 0
     private var closingFence = -1
     private var closed = false
     private val running = mutable.Set[Int]()
-    private val stageJob = mutable.Map[Int, (Int, String)]()
+    private val stageJob = mutable.Map[Int, (Int, String, Option[String])]()
+    private val executionFrame = mutable.Map[String, String]()
     private val lines = mutable.ArrayBuffer[(Double, String)]()
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized {
+        graftFrame(s.details).foreach(executionFrame(s.executionId.toString) = _)
+      }
+      case _ =>
+    }
 
     override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
       val props = Option(js.properties)
@@ -113,8 +137,10 @@ object Prof {
         if (fences == 2) closingFence = js.jobId
       } else if (fences == 1) {
         running += js.jobId
-        val site = props.flatMap(p => Option(p.getProperty("callSite.short")))
-        js.stageIds.foreach(id => stageJob(id) = (js.jobId, site.getOrElse("")))
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        val site = prop("callSite.short").getOrElse("")
+        val execution = prop("spark.sql.execution.id")
+        js.stageIds.foreach(id => stageJob(id) = (js.jobId, site, execution))
       }
     }
 
@@ -127,13 +153,13 @@ object Prof {
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
       synchronized {
         val si = sc.stageInfo
-        stageJob.get(si.stageId).foreach { case (jid, jsite) =>
+        stageJob.get(si.stageId).foreach { case (jid, jsite, execution) =>
           val wall = (for { s <- si.submissionTime; e <- si.completionTime }
             yield (e - s) / 1e3).getOrElse(0.0)
           val m = si.taskMetrics
-          val frame = si.details.linesIterator
-            .find(l => l.contains("graft.") && !l.contains("graft.tools.Prof"))
-            .map(_.trim).getOrElse(si.name.takeWhile(_ != '\n'))
+          val frame = graftFrame(si.details)
+            .orElse(execution.flatMap(executionFrame.get))
+            .getOrElse(si.name.takeWhile(_ != '\n'))
           val io = f"job=$jid%-3d in=${m.inputMetrics.bytesRead / 1e6}%.0fMB " +
             f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e6}%.1fMB " +
             f"sw=${m.shuffleWriteMetrics.bytesWritten / 1e6}%.1fMB " +

@@ -42,6 +42,20 @@ object SnapBench {
   private def median5(f: => Unit): Double =
     (1 to 5).map(_ => seconds(f)).sorted.apply(2)
 
+  /** Replace a table's `v00001.json` with `entry`. */
+  private def writeV1(dir: String, entry: Array[Byte]): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_graft_log",
+      "v00001.json"), entry)
+
+  /** Rewrite a one-commit table's entry without its per-file bounds. */
+  private def stripStats(spark: SparkSession, dir: String): Unit = {
+    val v1 = Snapshots.versions(spark, dir).head
+    require(v1.stats.isDefined, "entry had no stats block")
+    writeV1(dir, Snapshots.renderEntry(1, v1.op,
+      v1.dataFiles.map(_.copy(stats = Snapshots.FileStats.empty)),
+      Some(Nil), v1.schema))
+  }
+
   private def frame(spark: SparkSession, i: Int) = {
     import spark.implicits._
     Seq((i.toLong, s"row $i")).toDF("id", "text")
@@ -89,12 +103,7 @@ object SnapBench {
     timePrune() // warm the prune path itself
     val logSec = timePrune()
     // strip the stats block: the SAME question now pays the footer pass
-    val entry = new java.io.File(new java.io.File(dir, "_graft_log"),
-      "v00001.json")
-    val s = java.nio.file.Files.readString(entry.toPath)
-    val stripped = s.replaceAll(""","stats":\[.*?\](?=,"(remove|schema)")""", "")
-    require(stripped != s, "entry had no stats block")
-    java.nio.file.Files.writeString(entry.toPath, stripped)
+    stripStats(spark, dir)
     timePrune() // warm
     val footerSec = timePrune()
     println(f"""{"metric":"prune_search_sec","files":$files,"log_stats_sec":$logSec%.3f,"footer_stats_sec":$footerSec%.3f,"speedup":${footerSec / logSec}%.1f}""")
@@ -119,12 +128,7 @@ object SnapBench {
     }
     timeQ() // warm
     val skipSec = timeQ()
-    val entry = new java.io.File(new java.io.File(dir, "_graft_log"),
-      "v00001.json")
-    val s = java.nio.file.Files.readString(entry.toPath)
-    val stripped = s.replaceAll(""","stats":\[.*?\](?=,"(remove|schema)")""", "")
-    require(stripped != s, "entry had no stats block")
-    java.nio.file.Files.writeString(entry.toPath, stripped)
+    stripStats(spark, dir)
     timeQ() // warm
     val fullSec = timeQ()
     println(f"""{"metric":"skip_scan_sec","files":256,"with_skipping_sec":$skipSec%.3f,"without_sec":$fullSec%.3f,"speedup":${fullSec / skipSec}%.1f}""")
@@ -148,18 +152,11 @@ object SnapBench {
       val dir = freshDir()
       new java.io.File(dir, "_graft_log").mkdirs()
       val schema = Seq((0L, "x")).toDF("id", "text").schema
-      val files = (0 until n).map(i => f"fab$i%08x-00000.parquet")
-      val sizes = files.indices.map(_ => 1048576L)
-      val stats = files.indices.map(i =>
-        s"""{"#":100,"id":{"n":[${i * 100}.0,${i * 100 + 99}.0],"z":0},""" +
-          s""""text":{"s":["cm93","cm95"],"z":0}}""")
-      val entry = s"""{"version":1,"op":"append","files":[""" +
-        files.map(f => "\"" + f + "\"").mkString(",") +
-        s"""],"sizes":[${sizes.mkString(",")}],"stats":[""" +
-        stats.mkString(",") + s"""],"schema":${schema.json}}"""
-      java.nio.file.Files.writeString(
-        new java.io.File(new java.io.File(dir, "_graft_log"),
-          "v00001.json").toPath, entry)
+      val files = (0 until n).map(i => Snapshots.DataFile(
+        f"fab$i%08x-00000.parquet", 1048576L, Snapshots.FileStats(100, Map(
+          "id" -> Snapshots.NumStat(i * 100, i * 100 + 99, Some(0)),
+          "text" -> Snapshots.StrStat("row", "roy", Some(0))))))
+      writeV1(dir, Snapshots.renderEntry(1, "append", files, None, Some(schema)))
       val sec = seconds(require(
         Snapshots.writeAppend(Seq((1L, "row")).toDF("id", "text"), dir) == 2))
       val bytes = new java.io.File(new java.io.File(dir, "_graft_log"),
@@ -236,16 +233,10 @@ object SnapBench {
     Snapshots.read(spark, dir).count() // warm
     val zeroStat = timePlan() // schema + sizes logged: no FS call at all
     val entry = Snapshots.versions(spark, dir).head
-    val log = new java.io.File(dir, "_graft_log")
-    def rewrite(keepSchema: Boolean): Unit = {
-      val schemaPart =
-        if (keepSchema) s""","schema":${entry.schema.get.json}""" else ""
-      java.nio.file.Files.writeString(
-        new java.io.File(log, "v00001.json").toPath,
-        s"""{"version":1,"op":"append","files":[""" +
-          entry.files.map(f => "\"" + f + "\"").mkString(",") +
-          "]" + schemaPart + "}")
-    }
+    def rewrite(keepSchema: Boolean): Unit =
+      writeV1(dir, Snapshots.renderEntry(1, "append",
+        entry.files.map(Snapshots.DataFile(_)), None,
+        entry.schema.filter(_ => keepSchema)))
     // strip sizes only: explicit-schema read, one getFileStatus per file
     rewrite(keepSchema = true)
     Snapshots.read(spark, dir).count() // warm

@@ -19,6 +19,15 @@ class DumpSpec extends SparkSpec {
       "fields" -> "n_*", "max-partition-rows" -> "7"))
   }
 
+  test("flag parser: an unknown flag fails instead of swallowing the next argument") {
+    val slice = intercept[IllegalArgumentException](
+      Dump.parse(List("idx", "--slice", "4")))
+    assert(slice.getMessage.contains("--slice"), slice.getMessage)
+    val typo = intercept[IllegalArgumentException](
+      Dump.parse(List("idx", "--no-partiton", "--out", "/x")))
+    assert(typo.getMessage.contains("--no-partiton"), typo.getMessage)
+  }
+
   test("reference-shaped invocation dumps with rotation, format, and pushdowns") {
     val out = Files.createTempDirectory("dump_cli").toString
     val results = Dump.execute(spark, Array(

@@ -237,4 +237,18 @@ class LayoutSpec extends SparkSpec {
     assert(!kept.exists(_.contains("plain")),
       s"the ASCII file is provably out of range and must prune: $kept")
   }
+
+  test("pruneFilesStr: a query bound past the BMP keeps every file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_prstr").toString
+    Seq("\ue000", "\ue000").toDF("k").coalesce(1).write.parquet(s"$dir/t")
+    val parts = new java.io.File(s"$dir/t").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
+    // U+E000 < U+1F600 by code point and in Spark's UTF-8 byte order,
+    // but its UTF-16 unit sorts above the emoji's high surrogate
+    assert(spark.read.parquet(s"$dir/t")
+      .where($"k".between("a", "\ud83d\ude00")).count() == 2)
+    val kept = Layout.pruneFilesStr(
+      Layout.statsManifestFiles(spark, parts, Seq("k")), "k", "a", "\ud83d\ude00")
+    assert(parts.size == 1 && kept.size == 1, kept)
+  }
 }

@@ -226,7 +226,7 @@ class SnapshotStatsSpec extends SparkSpec {
     assert(snap.stats.isDefined, "stats block must survive the render")
     val st = snap.dataFiles.head.stats
     assert(!st.cols.get("score").exists(_.isInstanceOf[Snapshots.NumStat]),
-      s"an infinite bound would poison the hand-rolled JSON: $st")
+      s"JSON has no number for an infinite bound: $st")
     assert(st.cols.get("id").isDefined && st.rows == 2,
       "the finite column and the row count still log")
   }

@@ -31,6 +31,27 @@ class ProfSpec extends SparkSpec {
     assert(!err.contains("WARNING"), err)
   }
 
+  test("jobs labels the stages of broadcast jobs with their query's graft. frame") {
+    import org.apache.spark.sql.functions.broadcast
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val df = spark.range(20000).join(broadcast(spark.range(100).toDF("id")), "id")
+    // the broadcast's own stage carries only the exchange thread's site
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sc = spark.sparkContext
+    val seen = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        names.add(e.stageInfo.name)
+    }
+    sc.addSparkListener(seen)
+    val (_, rows) = try Prof.stages(spark, "broadcast_join", df)
+      finally sc.removeSparkListener(seen)
+    assert(names.toArray.exists(_.toString.contains("withThreadLocalCaptured")),
+      names)
+    // each line is "<io>  <job call site>  <frame>"
+    assert(rows.forall(_._2.split("  ").last.contains("graft.")),
+      rows.mkString("\n"))
+  }
+
   test("explain prints the formatted physical plan") {
     val (out, _) = prof("explain", sf(), q)
     assert(out.contains(s"==== $q ====") && out.contains("== Physical Plan =="),
